@@ -16,19 +16,12 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.headOption.getOrElse("plans/r11")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     val spark = Session.local(cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    // exact names or a "q<digits>" prefix up to its underscore boundary —
-    // a bare startsWith made "q13" also select q130..q139, so an automated
-    // evidence run could dump the wrong plans without noticing
-    def selected(n: String, f: Set[String]): Boolean =
-      f.contains(n) || f.exists(p => n.startsWith(p + "_"))
     var failed = List.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(selected(n, _)) }
+    SparkEntry.selectedQueries
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)

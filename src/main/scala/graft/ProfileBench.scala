@@ -7,14 +7,16 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-query execution profile: wall seconds plus the scheduler-side
   * counters that explain WHERE the time goes (job count, stage count,
-  * task count, summed executor run time, shuffle bytes). The guide's §1
+  * task count, summed task run and CPU time, shuffle bytes). The guide's §1
   * "measure first" companion to Bench — Bench answers "how long", this
   * answers "how many jobs/shuffles and how much task time", which
   * separates fixed per-job overhead (many tiny jobs) from genuine
   * compute/shuffle cost.
   *
   * Output: one CSV line per query on stdout,
-  * `name,wall_s,jobs,stages,tasks,exec_cpu_s,shuf_read_mb,shuf_write_mb`.
+  * `name,wall_s,jobs,stages,tasks,exec_task_run_s,exec_task_cpu_s,shuf_read_mb,shuf_write_mb`:
+  * `exec_task_run_s` sums `executorRunTime` (task wall time) and
+  * `exec_task_cpu_s` sums `executorCpuTime`.
   * Timing methodology matches Bench (noop sink, untimed first pass payn
   * codegen, second pass reported).
   */
@@ -23,12 +25,12 @@ object ProfileBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
     val spark = Session.local(cpus.toInt)
 
     val jobs = new AtomicLong; val stages = new AtomicLong
     val tasks = new AtomicLong; val execMs = new AtomicLong
+    val cpuNs = new AtomicLong
     val shufR = new AtomicLong; val shufW = new AtomicLong
     val stageDetail = sys.env.get("SPARK_GRAFT_PROFILE_STAGES").contains("true")
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -40,6 +42,7 @@ object ProfileBench {
         val m = s.stageInfo.taskMetrics
         if (m != null) {
           execMs.addAndGet(m.executorRunTime)
+          cpuNs.addAndGet(m.executorCpuTime)
           shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
           shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           if (stageDetail) {
@@ -56,7 +59,7 @@ object ProfileBench {
         }
       }
     })
-    def resetAll(): Unit = Seq(jobs, stages, tasks, execMs, shufR, shufW)
+    def resetAll(): Unit = Seq(jobs, stages, tasks, execMs, cpuNs, shufR, shufW)
       .foreach(_.set(0L))
 
     def hygiene(): Unit = try {
@@ -78,16 +81,14 @@ object ProfileBench {
       w
     }
 
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    println("name,wall_s,jobs,stages,tasks,exec_cpu_s,shuf_read_mb,shuf_write_mb")
-    sorted.foreach { case (name, fn) =>
+    println("name,wall_s,jobs,stages,tasks,exec_task_run_s,exec_task_cpu_s,shuf_read_mb,shuf_write_mb")
+    SparkEntry.selectedQueries.foreach { case (name, fn) =>
       (1 until passes).foreach(_ => runOnce(name, fn)) // untimed warmups
       Thread.sleep(150); resetAll()
       val wall = runOnce(name, fn)
       Thread.sleep(300) // listener bus is async; let counters settle
       println(f"$name,$wall%.3f,${jobs.get},${stages.get},${tasks.get}," +
-        f"${execMs.get / 1e3}%.2f,${shufR.get / 1048576.0}%.2f," +
+        f"${execMs.get / 1e3}%.2f,${cpuNs.get / 1e9}%.2f,${shufR.get / 1048576.0}%.2f," +
         f"${shufW.get / 1048576.0}%.2f")
     }
     spark.stop()

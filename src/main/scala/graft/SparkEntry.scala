@@ -53,6 +53,17 @@ object SparkEntry {
     suites.map(q => q.name ->
       ((s: SparkSession, d: String) => hashSafe(q.fn(s, d)))).toMap
 
+  /** Whether `only` (comma-separated, default `SPARK_GRAFT_ONLY`) selects
+    * query `name`: unset selects every query; otherwise an exact name or a
+    * "q<digits>" prefix up to its underscore boundary. A bare startsWith
+    * made "q13" also select q130..q139. */
+  def selected(name: String, only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Boolean =
+    only.forall(_.split(",").map(_.trim).exists(p => name == p || name.startsWith(p + "_")))
+
+  /** The registered queries that `SPARK_GRAFT_ONLY` selects, by name. */
+  def selectedQueries: Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => selected(n) }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries get a rows-only check.
     * OracleTypes.casts columns are wrapped so the oracle's result schema

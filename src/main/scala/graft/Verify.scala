@@ -165,9 +165,8 @@ object Verify {
     // profile; SessionPostureSpec pins the config map)
     val spark = Session.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q108 (comma-separated, prefix match) restricts the
-    // dump for single-query flake hunting — same contract as Bench's filter
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    // SPARK_GRAFT_ONLY=q108 (comma-separated) restricts the dump for
+    // single-query flake hunting — same contract as Bench's filter
     // suite-wide cache-hygiene gate: CacheHygieneSpec probes the graph/dedup
     // operators in isolation; THIS probe runs after every query in the
     // verify loop, so any future query-level cache()/persist() pin fails
@@ -177,8 +176,7 @@ object Verify {
     // localCheckpoint discipline passes this clean.
     val pinned = scala.collection.mutable.ArrayBuffer[String]()
     var ran = 0
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    SparkEntry.selectedQueries
       .foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         try {
@@ -214,7 +212,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.exists(k.startsWith)) }
+      .filter { case (k, _) => SparkEntry.selected(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

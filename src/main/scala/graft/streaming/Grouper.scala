@@ -138,6 +138,16 @@ private[streaming] object WakeableMemoryStream {
   *    `Grouper.startOnPool`, which runs batch BODIES on the caller's
   *    pool (its thread count caps batch concurrency) while the lanes
   *    remain Spark-managed.
+  *
+  * Cost of one lane micro-batch: Spark plans the batch, runs one collect
+  * job over its rows, calls the batch function, and writes two
+  * metadata-log entries: the offset log before the batch (`walCommit`)
+  * and the commit log after it (`commitOffsets`). The lanes write those
+  * logs through [[LocalCheckpointFileManager]]. Without its native
+  * library, Hadoop's local file system forks `chmod` and `readlink`
+  * through its `Shell` for every log file, about 20 processes and 100 ms
+  * per micro-batch; written with `java.nio`, each entry takes about a
+  * millisecond.
   */
 final class Grouper[A, B] private (
     spark: SparkSession,
@@ -159,7 +169,7 @@ final class Grouper[A, B] private (
     Encoders.tuple(Encoders.scalaLong, encA)
 
   private val lanes: Array[(MemoryStream[(Long, A)], StreamingQuery)] =
-    Array.tabulate(parallelism) { _ =>
+    Grouper.withLocalCheckpointLogs(spark)(Array.tabulate(parallelism) { _ =>
       // fixed partition count: every addData call creates a block, and the
       // default plan turns each block into its own input partition — a
       // burst of single-item submits would otherwise give a batch with
@@ -209,7 +219,7 @@ final class Grouper[A, B] private (
         }
         .start()
       (source, query)
-    }
+    })
 
   // the reference's dispatcher thread (`core.clj:124-135`): in interval
   // mode, push the accumulating batch to the lanes every `intervalMs`
@@ -313,12 +323,25 @@ final class Grouper[A, B] private (
       lanes.foreach { case (_, q) => q.stop(); q.awaitTermination() }
     }
   }
-
-  /** Reference alias (`core.clj:152-155`). */
-  def shutdownAndDrain(): Unit = close()
 }
 
 object Grouper {
+
+  private val checkpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  // `StreamExecution` clones the session conf when a query is constructed
+  // and its offset and commit logs read their Hadoop conf from that clone,
+  // so the class only has to be set while the lanes start. A class the
+  // user set is left alone; the lock keeps two starts from seeing each
+  // other's setting as the user's.
+  private def withLocalCheckpointLogs[T](spark: SparkSession)(startLanes: => T): T =
+    synchronized {
+      if (spark.conf.getOption(checkpointManagerKey).isDefined) startLanes
+      else {
+        spark.conf.set(checkpointManagerKey, classOf[LocalCheckpointFileManager].getName)
+        try startLanes finally spark.conf.unset(checkpointManagerKey)
+      }
+    }
 
   private def validate(capacity: Int, intervalMs: Option[Long], parallelism: Int): Unit = {
     require(capacity > 0, s"capacity must be a positive integer: $capacity")

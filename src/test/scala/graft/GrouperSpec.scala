@@ -1,11 +1,17 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -246,5 +252,60 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 4 lanes with processAllAvailable retries lands well above this
     assert(closeSec < 15.0, f"close() took $closeSec%.1f s — parked-lane stall")
     assert(!g.isRunning)
+  }
+
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  // `n` sequential flushes of one item each: at least `n` micro-batches,
+  // each writing one offset-log and one commit-log entry
+  private def flushRun(n: Int): Unit = {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val g = Grouper.start[Int, Int](spark,
+      ds => ds.collect().toSeq.map(_ + 1), capacity = 100, intervalMs = None)
+    try (1 to n).foreach { i =>
+      val f = g.submit(i)
+      g.flushNow()
+      assert(await(f) == i + 1)
+    } finally g.close()
+  }
+
+  // process starts recorded while `body` runs whose stack passes through
+  // a checkpoint file manager
+  private def checkpointForks(body: => Unit): Int = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    try body finally rec.stop()
+    val file = Files.createTempFile("grouper-forks", ".jfr")
+    try {
+      rec.dump(file)
+      RecordingFile.readAllEvents(file).asScala.count { e =>
+        e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(
+          _.getMethod.getType.getName.contains("CheckpointFileManager"))
+      }
+    } finally { rec.close(); Files.delete(file) }
+  }
+
+  test("start leaves the session's checkpoint file manager class as it was") {
+    assert(spark.conf.getOption(managerKey).isEmpty)
+    flushRun(1)
+    assert(spark.conf.getOption(managerKey).isEmpty, "unset must stay unset")
+    val userClass = classOf[FileContextBasedCheckpointFileManager].getName
+    spark.conf.set(managerKey, userClass)
+    try {
+      flushRun(1)
+      assert(spark.conf.getOption(managerKey).contains(userClass), "a user-set class must stay set")
+    } finally spark.conf.unset(managerKey)
+  }
+
+  test("lane checkpoint logs start no processes over 20 flushes (JFR gate)") {
+    assert(checkpointForks(flushRun(20)) == 0)
+    // control: the probe sees the forks of Spark's default manager, which
+    // Hadoop's local file system makes when its native library is absent
+    if (!NativeCodeLoader.isNativeCodeLoaded) {
+      spark.conf.set(managerKey, classOf[FileContextBasedCheckpointFileManager].getName)
+      try assert(checkpointForks(flushRun(20)) >= 20)
+      finally spark.conf.unset(managerKey)
+    }
   }
 }

@@ -12,6 +12,7 @@ median per-query ratio plus the biggest wins/regressions, i.e. the
 exact numbers SURVEY's round notes and VERDICT's perf section quote.
 """
 import json
+import os
 import statistics
 import sys
 
@@ -22,7 +23,7 @@ def load(p):
     # line itself sits in "parsed" (when the driver parsed it) or as the
     # last JSON object embedded in the captured "tail" string
     if "queries" not in d:
-        if isinstance(d.get("parsed"), dict) and "queries" in d["parsed"]:
+        if isinstance(d.get("parsed"), dict):
             d = d["parsed"]
         elif isinstance(d.get("tail"), str):
             t = d["tail"]
@@ -31,14 +32,22 @@ def load(p):
                 raise ValueError(f"{p}: no bench line in tail")
             dec = json.JSONDecoder()
             d, _ = dec.raw_decode(t[i:])
+    # the compact headline carries no per-query times, only a pointer to
+    # the file that does; follow it only when that file is from the same
+    # run (same suite total), since later runs overwrite it
+    if "queries" not in d and "queries_file" in d:
+        qf = os.path.join(os.path.dirname(p), d["queries_file"])
+        full = json.load(open(qf)) if os.path.exists(qf) else {}
+        if "queries" in full and full.get("value") == d.get("value"):
+            d = {**d, "queries": full["queries"]}
     return d
 
 
 def main():
     cur = load(sys.argv[1] if len(sys.argv) > 1 else "bench_out.json")
-    q = {k: v for k, v in cur["queries"].items() if v >= 0}
-    fails = [k for k, v in cur["queries"].items() if v < 0]
-    line = (f"{len(cur['queries'])} queries, {cur['value']:.1f} s warm / "
+    queries = cur.get("queries")
+    n = len(queries) if queries is not None else cur.get("n_queries", "?")
+    line = (f"{n} queries, {cur['value']:.1f} s warm / "
             f"{cur.get('cold_total', float('nan')):.1f} s cold (per-query "
             f"min of cold+warm), grouper lane "
             f"{cur.get('grouper_items_per_sec', 0) / 1000:.1f}k items/s")
@@ -47,12 +56,23 @@ def main():
                  f"{cur['grouper_probe_best_of_10'] / 1000:.1f}k, host unit "
                  f"{cur['host_single_core_unit_ms']:.0f} ms)")
     line += f", sf={cur.get('sf', '?')}"
+    if queries is None:
+        print(line)
+        print(f"no per-query times: queries_file "
+              f"{cur.get('queries_file', '(none)')} is missing or from "
+              f"another run; suite-level numbers only")
+        return
+    q = {k: v for k, v in queries.items() if v >= 0}
+    fails = [k for k, v in queries.items() if v < 0]
     if fails:
         line += f", FAILED: {','.join(sorted(fails))}"
     print(line)
     if len(sys.argv) > 2:
         prev_full = load(sys.argv[2])
-        prev = prev_full["queries"]
+        prev = prev_full.get("queries")
+        if prev is None:
+            print(f"vs prev: {sys.argv[2]} has no per-query times")
+            return
         common = {k: (prev[k], q[k]) for k in q if k in prev and prev[k] > 0}
         ratios = {k: b / a for k, (a, b) in common.items()}
         med = statistics.median(ratios.values())
