@@ -13,35 +13,24 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = args.headOption.getOrElse("plans/r11")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Session.local(cpus.toInt)
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     var failed = List.empty[String]
-    SparkEntry.selectedQueries
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
-            plan.getBytes("UTF-8"))
-          System.err.println(s"[plandump] wrote $name")
-        } catch { case e: Throwable =>
-          failed ::= name
-          System.err.println(s"[plandump] $name failed: $e")
-        } finally {
-          try {
-            spark.catalog.clearCache()
-            spark.catalog.listTables().collect()
-              .filter(t => t.name.startsWith("graft_s") && t.isTemporary)
-              .foreach(t => spark.catalog.dropTempView(t.name))
-          } catch { case _: Throwable => () }
-        }
-      }
+    SparkEntry.selectedQueries.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, Harness.sfDir)
+        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+          plan.getBytes("UTF-8"))
+        System.err.println(s"[plandump] wrote $name")
+      } catch { case e: Throwable =>
+        failed ::= name
+        System.err.println(s"[plandump] $name failed: $e")
+      } finally Harness.hygiene(spark)
+    }
     spark.stop()
     if (failed.nonEmpty) {
       // an evidence run must not LOOK successful while artifacts are

@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   * any wall-time ratio well past K exposes a superlinear plan.
   *
   * Usage: SPARK_GRAFT_SCALE_K=10 sbt "runMain graft.ScaleBench"
+  * (SPARK_GRAFT_ONLY selects a subset, SPARK_GRAFT_SHUFFLE_PARTITIONS
+  * overrides the posture's 8 × cores).
   * Prints one JSON line: per-query seconds at ×1 / ×K and the ratio.
   */
 object ScaleBench {
@@ -69,16 +71,41 @@ object ScaleBench {
     "q308_kruskal_wallis", "q373_conover_squared_ranks",
     "q414_mood_median", "q416_dunn_posthoc")
 
+  /** `k` copies of `df`, copy `i` transformed by `f(df, i)`. */
+  private def copies(df: DataFrame, k: Int)(f: (DataFrame, Int) => DataFrame): DataFrame =
+    (0 until k).map(i => f(df, i)).reduce(_ unionAll _)
+
+  /** The tables both corpus shapes grow alike. */
+  private def synthesizeShared(s: SparkSession, src: String, out: String, k: Int): Unit = {
+    import s.implicits._
+    // suppliers offset per copy, the key domain lineitem's l_suppkey
+    // points into, so the q253 supplier join resolves; nation/region are
+    // the fixed 25/5-row dimensions — one copy, shared by all
+    val supp = s.read.parquet(s"$src/supplier.parquet")
+    copies(supp, k) { (df, i) =>
+      df.withColumn("s_suppkey", $"s_suppkey" + lit(i.toLong * 10000000L))
+    }.write.mode("overwrite").parquet(s"$out/supplier.parquet")
+    // events for the time-series lanes: ids offset per copy, timestamps
+    // and the small event_type domain shared — per-key window/quantile
+    // work is row-proportional by construction
+    val ev = s.read.parquet(s"$src/events.parquet")
+    copies(ev, k) { (df, i) =>
+      df.withColumn("event_id", $"event_id" + lit(i.toLong * 1000000000L))
+        .withColumn("user_id", $"user_id" + lit(i.toLong * 10000000L))
+    }.write.mode("overwrite").parquet(s"$out/events.parquet")
+    s.read.parquet(s"$src/nation.parquet")
+      .write.mode("overwrite").parquet(s"$out/nation.parquet")
+    s.read.parquet(s"$src/region.parquet")
+      .write.mode("overwrite").parquet(s"$out/region.parquet")
+  }
+
   /** K offset/perturbed copies of the four input tables the risk
     * queries read. Copy 0 gets the same transformation as every other
     * copy so the ×1 baseline measures identical per-row work. */
   private def synthesize(s: SparkSession, src: String, out: String, k: Int): Unit = {
     import s.implicits._
-    def copies(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until k).map(i => f(df, i)).reduce(_ unionAll _)
-
     val docs = s.read.parquet(s"$src/documents.parquet")
-    copies(docs) { (df, i) =>
+    copies(docs, k) { (df, i) =>
       df.withColumn("doc_id", $"doc_id" + lit(i.toLong * 10000000L))
         // every token gets a copy-local prefix: within-copy token
         // equality (shingles, grams, spans) is preserved bit-for-bit,
@@ -87,7 +114,7 @@ object ScaleBench {
     }.write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     val cust = s.read.parquet(s"$src/customer.parquet")
-    copies(cust) { (df, i) =>
+    copies(cust, k) { (df, i) =>
       df.withColumn("c_custkey", $"c_custkey" + lit(i.toLong * 10000000L))
         // pairwise edit distance between any two copy prefixes is 3
         // (> maxDist=1), so fuzzy pairs stay copy-local
@@ -95,37 +122,18 @@ object ScaleBench {
     }.write.mode("overwrite").parquet(s"$out/customer.parquet")
 
     val orders = s.read.parquet(s"$src/orders.parquet")
-    copies(orders) { (df, i) =>
+    copies(orders, k) { (df, i) =>
       df.withColumn("o_orderkey", $"o_orderkey" + lit(i.toLong * 1000000000L))
         .withColumn("o_custkey", $"o_custkey" + lit(i.toLong * 10000000L))
     }.write.mode("overwrite").parquet(s"$out/orders.parquet")
 
     val li = s.read.parquet(s"$src/lineitem.parquet")
-    copies(li) { (df, i) =>
+    copies(li, k) { (df, i) =>
       df.withColumn("l_orderkey", $"l_orderkey" + lit(i.toLong * 1000000000L))
         .withColumn("l_suppkey", $"l_suppkey" + lit(i.toLong * 10000000L))
         .withColumn("l_partkey", $"l_partkey" + lit(i.toLong * 10000000L))
     }.write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-
-    // suppliers offset in lockstep with lineitem's l_suppkey so the
-    // q253 supplier join resolves within each copy; nation/region are
-    // the fixed 25/5-row dimensions — one copy, shared by all
-    val supp = s.read.parquet(s"$src/supplier.parquet")
-    copies(supp) { (df, i) =>
-      df.withColumn("s_suppkey", $"s_suppkey" + lit(i.toLong * 10000000L))
-    }.write.mode("overwrite").parquet(s"$out/supplier.parquet")
-    // events for the time-series lanes: ids offset per copy, timestamps
-    // and the small event_type domain shared — per-key window/quantile
-    // work is row-proportional by construction
-    val ev = s.read.parquet(s"$src/events.parquet")
-    copies(ev) { (df, i) =>
-      df.withColumn("event_id", $"event_id" + lit(i.toLong * 1000000000L))
-        .withColumn("user_id", $"user_id" + lit(i.toLong * 10000000L))
-    }.write.mode("overwrite").parquet(s"$out/events.parquet")
-    s.read.parquet(s"$src/nation.parquet")
-      .write.mode("overwrite").parquet(s"$out/nation.parquet")
-    s.read.parquet(s"$src/region.parquet")
-      .write.mode("overwrite").parquet(s"$out/region.parquet")
+    synthesizeShared(s, src, out, k)
   }
 
   /** The round-10 "true sf1" shape (VERDICT r9 task #4): unlike
@@ -142,14 +150,11 @@ object ScaleBench {
   private def synthesizeLinked(s: SparkSession, src: String, out: String,
       k: Int): Unit = {
     import s.implicits._
-    def copies(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until k).map(i => f(df, i)).reduce(_ unionAll _)
-
     val docs = s.read.parquet(s"$src/documents.parquet")
     val nDocs = docs.count()
     val toks = docs.select($"doc_id".as("__pid"),
       split(trim($"text"), "\\s+").as("__ptoks"))
-    copies(docs) { (df, i) =>
+    copies(docs, k) { (df, i) =>
       // partner rotates per copy; copy 0 splices too, so the ×1
       // baseline pays identical per-row work
       df.withColumn("__partner",
@@ -167,42 +172,29 @@ object ScaleBench {
     }.write.mode("overwrite").parquet(s"$out/documents.parquet")
 
     val cust = s.read.parquet(s"$src/customer.parquet")
-    copies(cust) { (df, i) =>
+    copies(cust, k) { (df, i) =>
       df.withColumn("c_custkey", $"c_custkey" + lit(i.toLong * 10000000L))
     }.write.mode("overwrite").parquet(s"$out/customer.parquet")
-    val supp = s.read.parquet(s"$src/supplier.parquet")
-    copies(supp) { (df, i) =>
-      df.withColumn("s_suppkey", $"s_suppkey" + lit(i.toLong * 10000000L))
-    }.write.mode("overwrite").parquet(s"$out/supplier.parquet")
 
     // the organic linkage: each order keeps its customer's LOCAL key
     // but lands in a hash-random copy of the domain — one giant
     // random bipartite graph instead of k disconnected ones
     val orders = s.read.parquet(s"$src/orders.parquet")
-    copies(orders) { (df, i) =>
+    copies(orders, k) { (df, i) =>
       df.withColumn("o_custkey",
           pmod(xxhash64($"o_orderkey", lit(i)), lit(k)) * 10000000L
             + $"o_custkey")
         .withColumn("o_orderkey", $"o_orderkey" + lit(i.toLong * 1000000000L))
     }.write.mode("overwrite").parquet(s"$out/orders.parquet")
     val li = s.read.parquet(s"$src/lineitem.parquet")
-    copies(li) { (df, i) =>
+    copies(li, k) { (df, i) =>
       df.withColumn("l_suppkey",
           pmod(xxhash64($"l_orderkey", $"l_linenumber", lit(i)), lit(k))
             * 10000000L + $"l_suppkey")
         .withColumn("l_orderkey", $"l_orderkey" + lit(i.toLong * 1000000000L))
         .withColumn("l_partkey", $"l_partkey" + lit(i.toLong * 10000000L))
     }.write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-
-    val ev = s.read.parquet(s"$src/events.parquet")
-    copies(ev) { (df, i) =>
-      df.withColumn("event_id", $"event_id" + lit(i.toLong * 1000000000L))
-        .withColumn("user_id", $"user_id" + lit(i.toLong * 10000000L))
-    }.write.mode("overwrite").parquet(s"$out/events.parquet")
-    s.read.parquet(s"$src/nation.parquet")
-      .write.mode("overwrite").parquet(s"$out/nation.parquet")
-    s.read.parquet(s"$src/region.parquet")
-      .write.mode("overwrite").parquet(s"$out/region.parquet")
+    synthesizeShared(s, src, out, k)
   }
 
   /** The heavy graph/dedup set the true-sf1 sweep times on the LINKED
@@ -233,26 +225,16 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val src = Harness.sfDir
     val k = sys.env.getOrElse("SPARK_GRAFT_SCALE_K", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // oversized shuffle partitions + AQE coalescing: the production
-    // posture for a data-size sweep. At ×1 AQE folds the extra reduce
-    // partitions away; at ×K the wide stages (wedge aggregates, pair
-    // joins) keep per-task state heap-sized instead of spilling through
-    // K×-fat fixed partitions — on a real cluster partitions scale with
-    // data, and a fixed count would misattribute spill cost as
-    // algorithmic superlinearity.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (cpus.toInt * 8).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the cluster posture's oversized shuffle partitions (8 x cores) + AQE
+    // coalescing: the production posture for a data-size sweep. At ×1 AQE
+    // folds the extra reduce partitions away; at ×K the wide stages (wedge
+    // aggregates, pair joins) keep per-task state heap-sized instead of
+    // spilling through K×-fat fixed partitions — on a real cluster
+    // partitions scale with data, and a fixed count would misattribute
+    // spill cost as algorithmic superlinearity.
+    val spark = Harness.session(Posture.cluster(Harness.cpus))
 
     // SPARK_GRAFT_SCALE_MODE=linked switches to the true-sf1 shape:
     // hash-linked giant-component corpus, the heavy graph/dedup five,
@@ -265,29 +247,15 @@ object ScaleBench {
     if (linked) { synthesizeLinked(spark, src, d1, 1); synthesizeLinked(spark, src, dk, k) }
     else { synthesize(spark, src, d1, 1); synthesize(spark, src, dk, k) }
 
-    val opFns: Map[String, String => DataFrame] =
-      survivalOps(spark).toMap
-    def time(name: String, dir: String): Double = {
-      val fn: String => DataFrame = opFns.getOrElse(name,
-        (d: String) => SparkEntry.queries(name)(spark, d))
-      val t0 = System.nanoTime()
-      try { fn(dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[scalebench] $name failed: $e"); -1.0 }
-      finally spark.catalog.clearCache()
-    }
+    val opFns = survivalOps(spark).toMap
+    def time(name: String, dir: String): Double =
+      Harness.timedNoop(spark, "scalebench", name)(
+        opFns.get(name).map(_(dir)).getOrElse(SparkEntry.queries(name)(spark, dir)))
 
-    // SPARK_GRAFT_SCALE_ONLY=q335,q295 spot-benches a subset without
-    // re-timing the whole risk set (synthesis still runs once)
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val base = if (linked) LinkedQueries ++ opFns.keys.toSeq.sorted
-      else RiskQueries
-    val selected = only match {
-      case Some(f) => base.filter(q => f.exists(q.startsWith))
-      case None => base
-    }
+    // SPARK_GRAFT_ONLY=q335,q295 spot-benches a subset without re-timing
+    // the whole risk set (synthesis still runs once)
+    val selected = (if (linked) LinkedQueries ++ opFns.keys.toSeq.sorted
+      else RiskQueries).filter(SparkEntry.selected(_))
     val rows = selected.map { q =>
       time(q, d1) // untimed warmup: codegen/JIT paid before either scale
       val t1 = time(q, d1)

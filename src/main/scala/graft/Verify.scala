@@ -159,11 +159,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // posture-profiled session (same knobs as before under the default
-    // profile; SessionPostureSpec pins the config map)
-    val spark = Session.local(cpus.toInt)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q108 (comma-separated) restricts the dump for
     // single-query flake hunting — same contract as Bench's filter

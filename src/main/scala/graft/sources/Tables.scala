@@ -31,12 +31,18 @@ object Tables {
     val path = s"$sfDir/$name.parquet"
     // key on the session confs that change what parquet inference RETURNS
     // (nanosAsLong decides whether a TIMESTAMP(NANOS) column arrives as
-    // long, inferTimestampNTZ whether isAdjustedToUTC=false becomes NTZ) —
-    // a path-only key would let the first session's inference poison a
-    // later differently-configured session's reads
-    val key = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") +
-      "|" + spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") +
-      "|" + path
+    // long, inferTimestampNTZ whether isAdjustedToUTC=false becomes NTZ,
+    // binaryAsString whether an unannotated BINARY column becomes a
+    // string, int96AsTimestamp whether INT96 becomes a timestamp, and
+    // caseSensitive how column names resolve) — a path-only key would let
+    // the first session's inference poison a later differently-configured
+    // session's reads
+    val key = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.binaryAsString",
+      "spark.sql.parquet.int96AsTimestamp",
+      "spark.sql.caseSensitive").map(spark.conf.get(_)).mkString("", "|", "|" + path)
     val schema = schemaCache.computeIfAbsent(key,
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)

@@ -30,7 +30,6 @@ private[streaming] final class WakeableMemoryStream[T](
 
   private val gate = new Object
   private var armed = false // data added since the last park; guarded by gate
-  @volatile private var lastPolled: OffsetV2 = null
 
   override def addData(data: IterableOnce[T])
       : org.apache.spark.sql.execution.streaming.Offset = {
@@ -54,16 +53,17 @@ private[streaming] final class WakeableMemoryStream[T](
     armed = false
   }
 
-  // Spark-version pin (which engine path drives which override): as of
-  // Spark 4.x, MicroBatchExecution's constructNextBatch calls THIS
-  // (start, limit) overload for any source implementing
-  // SupportsAdmissionControl — MemoryStream does, via
-  // SupportsTriggerAvailableNow — so this is the live path. The zero-arg
-  // overload below covers the legacy non-admission-control route only.
-  // If a future Spark drives neither (e.g. a new offset-negotiation API),
-  // the lane silently degrades to busy polling at ProcessingTime(0) —
-  // functionally correct but churny; GrouperSpec's close-latency bound
-  // and the GrouperRateProbe trend are the canaries for that regression.
+  // Spark-version pin: as of Spark 4.x, MicroBatchExecution's
+  // constructNextBatch calls THIS (start, limit) overload for any source
+  // implementing SupportsAdmissionControl — MemoryStream does, via
+  // SupportsTriggerAvailableNow — so this is the only path. The zero-arg
+  // latestOffset() is not overridden: MemoryStreamBaseClass's own body
+  // throws IllegalStateException("Should not reach here!"), so Spark never
+  // calls it for this source. If a future Spark drives a different
+  // offset-negotiation API, the lane silently degrades to busy polling at
+  // ProcessingTime(0) — functionally correct but churny; GrouperSpec's
+  // close-latency bound and Bench's grouper_probe_best_of_10 trend are
+  // the canaries for that regression.
   // close() latency: query.stop() interrupts the stream thread, which
   // unparks the wait below, so close blocks at most ~one idleParkMs per
   // lane cycle (bounded; asserted by GrouperSpec's close-latency test).
@@ -71,15 +71,6 @@ private[streaming] final class WakeableMemoryStream[T](
     val first = super.latestOffset(start, limit)
     if (first != null && first != start) first
     else { parkForData(); super.latestOffset(start, limit) }
-  }
-
-  override def latestOffset(): OffsetV2 = {
-    val first = super.latestOffset()
-    if (first != null && first != lastPolled) { lastPolled = first; first }
-    else {
-      parkForData()
-      val o = super.latestOffset(); lastPolled = o; o
-    }
   }
 }
 

@@ -72,4 +72,20 @@ object Shims {
   def cacheManagerEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
+
+  /** Names of the session's local temp views, read from the session
+    * catalog (`sessionState` is package-private): unlike
+    * `spark.catalog.listTables()`, this launches no Spark job. */
+  def tempViewNames(spark: org.apache.spark.sql.SparkSession): Seq[String] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog.getTempViewNames()
+
+  /** Blocks until every listener has processed every event posted so far
+    * (`listenerBus` is `private[spark]`). A timeout is reported on stderr,
+    * never silent: the caller's listener counters may then be short. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession, timeoutMs: Long = 10000L): Unit =
+    try spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException =>
+      System.err.println(s"[graft] WARNING listener bus not drained within $timeoutMs ms")
+    }
 }

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The `SPARK_GRAFT_ONLY` filter shared by Verify, Bench, ProfileBench and
-  * PlanDump. */
+/** The `SPARK_GRAFT_ONLY` filter shared by Verify, Bench, PlanDump and
+  * ScaleBench (whose survival operators carry `op_` names). */
 class QuerySelectionSpec extends AnyFunSuite {
 
   test("a query-number prefix stops at its underscore; exact names match") {
@@ -13,6 +13,8 @@ class QuerySelectionSpec extends AnyFunSuite {
     assert(!SparkEntry.selected("q139_baz", only))
     assert(SparkEntry.selected("q101_x", only))
     assert(!SparkEntry.selected("q101_xy", only))
+    assert(!SparkEntry.selected("op_kaplan_meier_routed", only))
+    assert(SparkEntry.selected("op_kaplan_meier_routed", Some("op_kaplan_meier_routed")))
     assert(SparkEntry.selected("q130_bar", None), "unset selects every query")
   }
 }

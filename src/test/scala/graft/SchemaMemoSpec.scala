@@ -57,4 +57,27 @@ class SchemaMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(otherTs === org.apache.spark.sql.types.TimestampType,
       "differently-configured session read a poisoned schema memo")
   }
+
+  test("memo keys on binaryAsString: an unannotated BINARY column re-infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    // written through parquet-mr, not Spark: a Spark-written footer carries
+    // the Spark schema, which inference prefers over binaryAsString
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_bin").toString
+    val schema = MessageTypeParser.parseMessageType("message t { required binary payload; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/blobs.parquet"))
+      .withType(schema).withConf(new org.apache.hadoop.conf.Configuration()).build()
+    w.write(new SimpleGroupFactory(schema).newGroup().append("payload", "abc"))
+    w.close()
+    def payloadType(binaryAsString: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.parquet.binaryAsString", binaryAsString.toString)
+      Tables.table(s, dir, "blobs").schema("payload").dataType
+    }
+    assert(payloadType(binaryAsString = false) === BinaryType)
+    assert(payloadType(binaryAsString = true) === StringType,
+      "binaryAsString=true session read the BinaryType schema memo")
+  }
 }
