@@ -4,12 +4,16 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 import scala.concurrent.{Future, Promise}
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{ReadLimit, Offset => OffsetV2}
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MemoryStreamInputPartition}
 
 /** A [[MemoryStream]] whose idle offset poll PARKS instead of spinning:
   * when a trigger finds no new data, `latestOffset` blocks on a monitor
@@ -20,13 +24,17 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   * trigger (round-9 verdict: `parallelism × 200` empty micro-batch polls
   * per second of constant driver churn on an idle instance).
   *
+  * It also keeps the rows of the range Spark plans for each micro-batch,
+  * so the lane hands them to the batch function from the driver
+  * ([[takePlanned]]) instead of running a Spark job over rows it already
+  * holds. No partition count is fixed: no task ever reads the partitions,
+  * and the default plan gives one per `addData` block without copying.
+  *
   * Ids are allocated from a high base so the case-class equality of
   * [[MemoryStream]] can never collide with companion-allocated streams. */
 private[streaming] final class WakeableMemoryStream[T](
-    spark: SparkSession, numPartitions: Int, idleParkMs: Long)(
-    implicit enc: Encoder[T])
-  extends MemoryStream[T](
-    WakeableMemoryStream.nextId(), spark, Some(numPartitions)) {
+    spark: SparkSession, idleParkMs: Long)(implicit enc: Encoder[T])
+  extends MemoryStream[T](WakeableMemoryStream.nextId(), spark, None) {
 
   private val gate = new Object
   private var armed = false // data added since the last park; guarded by gate
@@ -72,6 +80,29 @@ private[streaming] final class WakeableMemoryStream[T](
     if (first != null && first != start) first
     else { parkForData(); super.latestOffset(start, limit) }
   }
+
+  // the rows of the range Spark planned last, one array per addData block
+  // in offset order; planned and taken on the lane's stream thread
+  @volatile private var planned: Array[Array[UnsafeRow]] = Array.empty
+  private lazy val fromRow = encoder.resolveAndBind().createDeserializer()
+
+  // Spark-version pin: ForeachBatchSink.addBatch calls
+  // `data.queryExecution.toRdd` before the user function, and building
+  // that RDD plans this stream's scan for the batch's offset range, so the
+  // stash always holds the batch the function is about to see
+  override def planInputPartitions(start: OffsetV2, end: OffsetV2): Array[InputPartition] = {
+    val parts = super.planInputPartitions(start, end)
+    planned = parts.map(_.asInstanceOf[MemoryStreamInputPartition].records)
+    parts
+  }
+
+  /** The rows of the last planned range, decoded on the driver, in the
+    * order they were added; clears the stash. */
+  def takePlanned(): IndexedSeq[T] = {
+    val blocks = planned
+    planned = Array.empty
+    blocks.iterator.flatMap(_.iterator).map(fromRow(_)).toIndexedSeq
+  }
 }
 
 private[streaming] object WakeableMemoryStream {
@@ -86,7 +117,7 @@ private[streaming] object WakeableMemoryStream {
   *
   * Semantics preserved from the reference (SURVEY §2.1):
   *  - trigger disjunction: flush on interval elapsed (`core.clj:127-128`
-  *    ≙ the interval dispatcher timer below), on queue-full
+  *    ≙ the interval flush armed below; see the deviations), on queue-full
   *    (`core.clj:42-44` — capacity-full pushes the accumulating batch
   *    IMMEDIATELY, in interval mode too, exactly like the reference's
   *    failed `offer` → `wakeUp`), or on close-drain (`core.clj:58-66` ≙
@@ -124,14 +155,24 @@ private[streaming] object WakeableMemoryStream {
   *    throws. [[submitAttempt]] is the faithful form: its future always
   *    succeeds, carrying the batch exception as a VALUE on failure.
   *    Errback behavior is identical on both sides;
+  *  - the interval runs from the first item buffered after a flush, not
+  *    on a clock (the reference sleeps `interval` after each drain). No
+  *    item waits longer than `intervalMs` either way and steady traffic
+  *    sees the same cadence, but a lone item waits the whole interval.
+  *    In exchange, a capacity-bound cycle longer than the interval
+  *    (every request outstanding, refills arriving as lanes finish) is
+  *    never split by a tick landing at a random point of its refill,
+  *    which made saturation throughput jump between runs; and an idle
+  *    grouper wakes no thread;
   *  - the reference's `:pool` integer form maps to `parallelism`
   *    streaming lanes; the caller-supplied-`ExecutorService` form is
   *    `Grouper.startOnPool`, which runs batch BODIES on the caller's
   *    pool (its thread count caps batch concurrency) while the lanes
   *    remain Spark-managed.
   *
-  * Cost of one lane micro-batch: Spark plans the batch, runs one collect
-  * job over its rows, calls the batch function, and writes two
+  * Cost of one lane micro-batch: Spark plans the batch, the lane decodes
+  * the planned rows on the driver (no Spark job: the rows already sit in
+  * the lane's memory stream), calls the batch function, and writes two
   * metadata-log entries: the offset log before the batch (`walCommit`)
   * and the commit log after it (`commitOffsets`). The lanes write those
   * logs through [[LocalCheckpointFileManager]]. Without its native
@@ -155,18 +196,15 @@ final class Grouper[A, B] private (
   // collect here and are pushed to the lanes by interval timer, capacity
   // overflow, explicit wakeUp or close — never directly from submit
   private val buffers = Array.fill(parallelism)(new ArrayBuffer[(Long, A)])
+  private var buffered = 0 // items across `buffers`; guarded by lock
+  private var flushes = 0L // flushBuffers calls so far; guarded by lock
 
   private implicit val reqEnc: Encoder[(Long, A)] =
     Encoders.tuple(Encoders.scalaLong, encA)
 
-  private val lanes: Array[(MemoryStream[(Long, A)], StreamingQuery)] =
-    Grouper.withLocalCheckpointLogs(spark)(Array.tabulate(parallelism) { _ =>
-      // fixed partition count: every addData call creates a block, and the
-      // default plan turns each block into its own input partition — a
-      // burst of single-item submits would otherwise give a batch with
-      // thousands of one-row tasks
-      val source: MemoryStream[(Long, A)] =
-        new WakeableMemoryStream[(Long, A)](spark, 4, 100L)(reqEnc)
+  private val lanes: Array[(WakeableMemoryStream[(Long, A)], StreamingQuery)] =
+    Grouper.withLocalCheckpointLogs(spark)(Array.tabulate(parallelism) { lane =>
+      val source = new WakeableMemoryStream[(Long, A)](spark, 100L)(reqEnc)
       val query = source.toDS()
         .writeStream
         // interval 0, NOT the user interval: batch boundaries are decided
@@ -178,14 +216,14 @@ final class Grouper[A, B] private (
         // 0 also skips ProcessingTimeExecutor's falling-behind warning,
         // which a parked poll would otherwise trip every idle cycle)
         .trigger(Trigger.ProcessingTime(0L))
-        .foreachBatch { (batch: Dataset[(Long, A)], _: Long) =>
-          // one collect of the capacity-bounded batch, sorted driver-side:
-          // a per-batch orderBy would shuffle and re-execute per downstream
-          // job, dominating throughput with fixed scheduling latency
-          val rows = {
-            import scala.jdk.CollectionConverters._
-            batch.collectAsList().asScala.toIndexedSeq.sortBy(_._1)
-          }
+        .foreachBatch { (_: Dataset[(Long, A)], _: Long) =>
+          // the batch's rows are read from the source's planned range on
+          // the driver, never from the batch Dataset: nothing runs it, so
+          // a micro-batch launches no Spark job. Sorted driver-side by id
+          val rows = source.takePlanned().sortBy(_._1)
+          // the scan never runs, so report its rows for the progress's
+          // numInputRows; lanes(lane) is set before any data can arrive
+          Shims.addMicroBatchScanRows(lanes(lane)._2, source, rows.length.toLong)
           val ids = rows.map(_._1)
           if (ids.nonEmpty) {
             try {
@@ -213,14 +251,25 @@ final class Grouper[A, B] private (
     })
 
   // the reference's dispatcher thread (`core.clj:124-135`): in interval
-  // mode, push the accumulating batch to the lanes every `intervalMs`
+  // mode, the first item into an empty buffer arms one flush `intervalMs`
+  // later, which does nothing if another flush came first (see the
+  // deviation in the class doc)
   private val dispatcher: Option[java.util.concurrent.ScheduledExecutorService] =
-    intervalMs.map { ms =>
-      val t = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
+    intervalMs.map { _ =>
+      java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
         (r: Runnable) => { val th = new Thread(r, "grouper-dispatcher"); th.setDaemon(true); th })
-      t.scheduleAtFixedRate(() => flushNow(), ms, ms,
-        java.util.concurrent.TimeUnit.MILLISECONDS)
-      t
+    }
+
+  // called under lock
+  private def armIntervalFlush(): Unit =
+    for (t <- dispatcher; ms <- intervalMs) {
+      val armedAt = flushes
+      try t.schedule((() => lock.synchronized { if (flushes == armedAt) flushBuffers() }): Runnable,
+        ms, java.util.concurrent.TimeUnit.MILLISECONDS)
+      catch {
+        // close shut the dispatcher down; its own flush takes the item
+        case _: java.util.concurrent.RejectedExecutionException => ()
+      }
     }
 
   // callback exceptions are contained here: one throwing user callback must
@@ -267,11 +316,13 @@ final class Grouper[A, B] private (
       val lane = (id % parallelism).toInt
       pending.put(id, (p, callback, errback))
       buffers(lane) += ((id, elem))
+      buffered += 1
+      if (buffered == 1) armIntervalFlush()
       // capacity-full flushes the accumulating batch immediately — in
       // interval mode too (the reference's failed offer → wakeUp,
       // core.clj:42-44): a caller tuning capacity as a latency bound gets
       // the flush now, not at the next interval tick
-      if (buffers.map(_.length).sum >= capacity) flushBuffers()
+      if (buffered >= capacity) flushBuffers()
     }
     p.future
   }
@@ -297,6 +348,8 @@ final class Grouper[A, B] private (
       }
       lane += 1
     }
+    buffered = 0
+    flushes += 1
   }
 
   /** Early flush — the reference's `wakeUp` (`core.clj:53-56`): push the
@@ -305,13 +358,30 @@ final class Grouper[A, B] private (
   def flushNow(): Unit = lock.synchronized(flushBuffers())
 
   /** Graceful drain (`core.clj:58-66` / `shutdown!`): every accepted
-    * request is processed before this returns. */
+    * request is processed before this returns. A lane whose query has
+    * died or was stopped cannot process its requests: close still stops
+    * and awaits every lane, then fails each request left pending, with
+    * the lane's death as the exception's cause, and returns normally. */
   def close(): Unit = {
     if (running.compareAndSet(true, false)) {
       dispatcher.foreach(_.shutdownNow())
       lock.synchronized(flushBuffers())
-      lanes.foreach(_._2.processAllAvailable())
-      lanes.foreach { case (_, q) => q.stop(); q.awaitTermination() }
+      // a dead lane's processAllAvailable throws its death cause, and a
+      // stopped lane's returns at once; neither may keep the other lanes
+      // from draining and stopping
+      val causes = lanes.map { case (_, q) =>
+        try { q.processAllAvailable(); None }
+        catch { case e: Throwable => Some(e) }
+      }
+      lanes.foreach { case (_, q) =>
+        try { q.stop(); q.awaitTermination() }
+        catch { case _: Throwable => () } // the death cause was kept above
+      }
+      pending.keySet.asScala.toList.foreach { id =>
+        val lane = (id % parallelism).toInt
+        fail(id, new IllegalStateException(
+          s"Grouper lane $lane stopped before processing request $id", causes(lane).orNull))
+      }
     }
   }
 }

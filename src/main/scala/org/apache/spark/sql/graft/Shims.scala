@@ -80,6 +80,20 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog.getTempViewNames()
 
+  /** Adds `rows` to the `numOutputRows` metric of the scans of `stream` in
+    * the micro-batch `query` is running now (`lastExecution`). Progress
+    * reports read a source's `numInputRows` from that metric, so a source
+    * whose rows reach the batch without the scan running reports them here.
+    * Call it on the query's stream thread, inside the batch. */
+  def addMicroBatchScanRows(query: org.apache.spark.sql.streaming.StreamingQuery,
+      stream: org.apache.spark.sql.connector.read.streaming.SparkDataStream, rows: Long): Unit =
+    query.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.foreach {
+        case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec if s.stream eq stream =>
+          s.metrics("numOutputRows").add(rows)
+        case _ =>
+      }
+
   /** Blocks until every listener has processed every event posted so far
     * (`listenerBus` is `private[spark]`). A timeout is reported on stderr,
     * never silent: the caller's listener counters may then be short. */

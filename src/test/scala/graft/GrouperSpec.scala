@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 import scala.concurrent.Await
@@ -10,8 +11,11 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.util.NativeCodeLoader
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -177,6 +181,24 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally g.close()
   }
 
+  test("the interval runs from the first item buffered after a flush") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val g = Grouper.start[Int, Int](spark,
+      ds => ds.collect().toSeq, capacity = 100, intervalMs = Some(400L))
+    try {
+      val warm = g.submit(0); g.flushNow(); await(warm)
+      // item 1 arms a flush for t0 + 400 ms, then flushNow beats it: that
+      // armed flush must not cut item 2's interval short
+      val t0 = System.nanoTime()
+      val f1 = g.submit(1); g.flushNow(); await(f1)
+      val t2 = System.nanoTime()
+      await(g.submit(2))
+      val waitedMs = (System.nanoTime() - t2) / 1e6
+      assert(waitedMs >= 400, s"item 2 flushed after ${waitedMs}ms " +
+        s"(submitted ${(t2 - t0) / 1e6}ms after item 1)")
+    } finally g.close()
+  }
+
   test("parallelism > 1 executes batches concurrently like the reference pool (test:79-87)") {
     implicit val enc = org.apache.spark.sql.Encoders.scalaInt
     val active = new AtomicInteger(0)
@@ -307,5 +329,87 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
       try assert(checkpointForks(flushRun(20)) >= 20)
       finally spark.conf.unset(managerKey)
     }
+  }
+
+  // the streaming queries `start` adds: one per lane
+  private def lanesOf[T](start: => T): (T, Seq[StreamingQuery]) = {
+    val before = spark.streams.active.map(_.id).toSet
+    val g = start
+    (g, spark.streams.active.toSeq.filterNot(q => before(q.id)))
+  }
+
+  test("lane micro-batches launch no Spark job over 20 flushes (job gate)") {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      flushRun(20)
+      Shims.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs over 20 lane micro-batches")
+  }
+
+  test("lane progress counts every submitted item as an input row") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val (g, queries) = lanesOf(Grouper.start[Int, Int](spark,
+      ds => ds.collect().toSeq.map(_ + 1), capacity = 100, intervalMs = None, parallelism = 4))
+    assert(queries.size == 4)
+    val n = 37
+    try (1 to n).grouped(5).foreach { chunk =>
+      val fs = chunk.map(g.submit(_))
+      g.flushNow()
+      fs.foreach(await(_))
+    } finally g.close()
+    // a batch's progress is reported right after its commit, which may
+    // trail the completion of its futures
+    def inputRows = queries.map(_.recentProgress.map(_.numInputRows).sum).sum
+    val deadline = System.nanoTime() + 10000000000L
+    while (inputRows < n && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(inputRows == n)
+  }
+
+  test("a batch of many addData blocks reaches the batch function in submission order") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val release = new CountDownLatch(1)
+    val batches = new ConcurrentLinkedQueue[Seq[Int]]()
+    val g = Grouper.start[Int, Int](spark, ds => {
+      val xs = ds.collect().toSeq
+      batches.add(xs)
+      if (xs.contains(0)) release.await(60, TimeUnit.SECONDS)
+      xs
+    }, capacity = 1000, intervalMs = None)
+    try {
+      val blocker = g.submit(0)
+      g.flushNow()
+      while (batches.isEmpty) Thread.sleep(5)
+      // the lane is inside the first batch: each flush below adds one
+      // single-item block, and the next micro-batch takes them all
+      val fs = (1 to 50).map { i => val f = g.submit(i); g.flushNow(); f }
+      release.countDown()
+      assert(await(blocker) == 0)
+      assert(fs.map(await(_)) == (1 to 50))
+      assert(batches.asScala.toSeq == Seq(Seq(0), 1 to 50))
+    } finally { release.countDown(); g.close() }
+  }
+
+  test("close() fails the pending requests of a stopped lane and completes the rest") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val (g, queries) = lanesOf(Grouper.start[Int, Int](spark,
+      ds => ds.collect().toSeq.map(_ + 1), capacity = 100, intervalMs = None, parallelism = 4))
+    assert(queries.size == 4)
+    queries.head.stop()
+    val fs = (0 until 8).map(g.submit(_))
+    g.close()
+    val outcomes = fs.map(f => scala.util.Try(Await.result(f, 30.seconds)))
+    assert(!outcomes.exists(_.failed.toOption.exists(_.isInstanceOf[java.util.concurrent.TimeoutException])),
+      s"a future never completed: $outcomes")
+    val failed = outcomes.indices.filter(outcomes(_).isFailure)
+    // ids go round-robin to lanes: the stopped lane held two of them
+    assert(failed.size == 2 && failed(1) - failed(0) == 4, s"failed ids $failed")
+    failed.foreach(i => assert(outcomes(i).failed.get.isInstanceOf[IllegalStateException]))
+    outcomes.indices.filterNot(failed.contains).foreach(i => assert(outcomes(i).get == i + 1))
+    assert(!g.isRunning)
   }
 }

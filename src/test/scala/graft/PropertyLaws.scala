@@ -2,6 +2,7 @@ package graft
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
@@ -204,5 +205,67 @@ object PropertyLaws extends Properties("graft") {
         val results = futures.map(Await.result(_, 60.seconds))
         results.toSet == Set(xs.length.toLong)
       } finally if (g.isRunning) g.close()
+    }
+
+  // one step of a grouper schedule: submit an item (whose batch then
+  // throws when `bad`), or flush the accumulating batch now
+  private sealed trait Step
+  private final case class Submit(bad: Boolean) extends Step
+  private case object Flush extends Step
+
+  private val schedules = for {
+    steps <- Gen.listOf(Gen.frequency(
+      5 -> Gen.const(Submit(bad = false)), 1 -> Gen.const(Submit(bad = true)),
+      2 -> Gen.const(Flush)))
+    parallelism <- Gen.chooseNum(1, 4)
+    capacity <- Gen.chooseNum(2, 20)
+    interval <- Gen.option(Gen.chooseNum(5L, 50L))
+  } yield (steps, parallelism, capacity, interval)
+
+  property("grouper: every request completes exactly once under submit, flushNow, failing batches and close") =
+    forAll(schedules) { case (steps, parallelism, capacity, interval) =>
+      val submits = steps.collect { case s: Submit => s }
+      val n = submits.length
+      // request i carries i, or -(i + 1) when its batch must throw
+      val values = submits.zipWithIndex.map { case (s, i) => if (s.bad) -(i + 1) else i }
+      def index(v: Int) = if (v < 0) -v - 1 else v
+      val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Int]]()
+      val callbacks, errbacks, completions = new java.util.concurrent.atomic.AtomicIntegerArray(n)
+      val g = Grouper.start[Int, Int](spark, ds => {
+        val xs = ds.collect().toSeq
+        batches.add(xs)
+        if (xs.exists(_ < 0)) throw new RuntimeException("bad item")
+        xs.map(_ * 2)
+      }, capacity = capacity, intervalMs = interval, parallelism = parallelism)
+      val futures = try {
+        var i = 0
+        steps.flatMap {
+          case Flush => g.flushNow(); None
+          case Submit(_) =>
+            val id = i
+            i += 1
+            val f = g.submit(values(id), callback = _ => { callbacks.incrementAndGet(id); () },
+              errback = _ => { errbacks.incrementAndGet(id); () })
+            f.onComplete(_ => { completions.incrementAndGet(id); () })(
+              scala.concurrent.ExecutionContext.parasitic)
+            Some(f)
+        }
+      } finally g.close()
+      val outcomes = futures.map(f => scala.util.Try(Await.result(f, 60.seconds)))
+      // onComplete runs on the completing thread, possibly just after the
+      // waiter above saw the future complete
+      val deadline = System.nanoTime() + 10000000000L
+      while ((0 until n).exists(completions.get(_) == 0) && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      val seen = batches.asScala.toSeq
+      val batchOf = seen.flatMap(b => b.map(v => index(v) -> b)).toMap
+      val inOrder = seen.forall(b => b.map(index) == b.map(index).sorted)
+      val deliveredOnce = seen.flatten.map(index).sorted == (0 until n)
+      inOrder && deliveredOnce && (0 until n).forall { i =>
+        val failedBatch = batchOf(i).exists(_ < 0)
+        callbacks.get(i) + errbacks.get(i) == 1 && completions.get(i) == 1 &&
+          (if (failedBatch) errbacks.get(i) == 1 && outcomes(i).isFailure
+           else outcomes(i) == scala.util.Success(values(i) * 2))
+      }
     }
 }
