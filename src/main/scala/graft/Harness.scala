@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Shims
@@ -51,9 +52,17 @@ object Harness {
     * and shuffle cost. `exec_task_run_s` sums `executorRunTime` (task
     * wall time), `exec_task_cpu_s` sums `executorCpuTime`. Listeners see
     * events asynchronously: read the counters after
-    * `Shims.drainListenerBus`, or they can miss a query's last stages. */
+    * `Shims.drainListenerBus`, or they can miss a query's last stages.
+    * `codegen_compiles` is the JVM's count of Janino compiles since
+    * [[reset]]: above 0 in a warm run, it names a query whose generated
+    * code misses the codegen cache. */
   final class Profile extends SparkListener {
     val jobs, stages, tasks, runMs, cpuNs, shufRead, shufWrite = new LongAdder
+    private var compiles0 = compileCount
+
+    private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    def codegenCompiles: Long = compileCount - compiles0
 
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
 
@@ -69,12 +78,15 @@ object Harness {
       }
     }
 
-    def reset(): Unit =
+    def reset(): Unit = {
       Seq(jobs, stages, tasks, runMs, cpuNs, shufRead, shufWrite).foreach(_.reset())
+      compiles0 = compileCount
+    }
 
     def json: String =
       f"""{"jobs":${jobs.sum},"stages":${stages.sum},"tasks":${tasks.sum},""" +
         f""""exec_task_run_s":${runMs.sum / 1e3}%.2f,"exec_task_cpu_s":${cpuNs.sum / 1e9}%.2f,""" +
-        f""""shuf_read_mb":${shufRead.sum / 1048576.0}%.2f,"shuf_write_mb":${shufWrite.sum / 1048576.0}%.2f}"""
+        f""""shuf_read_mb":${shufRead.sum / 1048576.0}%.2f,"shuf_write_mb":${shufWrite.sum / 1048576.0}%.2f,""" +
+        s""""codegen_compiles":$codegenCompiles}"""
   }
 }

@@ -7,10 +7,12 @@ import org.apache.spark.sql.SparkSession
   * entry point (tests, Verify, Bench, a user's own session) builds the
   * same posture instead of hand-copying configs.
   *
-  * Defaults reproduce Spark's own defaults plus the project's two
+  * Defaults reproduce Spark's own defaults plus the project's three
   * local-mode choices (shuffle partitions = cores instead of 200, AQE
-  * on), so applying the default profile changes NOTHING about the
-  * benched plans — SessionPostureSpec pins that. Every knob is
+  * on, and a generated-code cache of [[Session.CodegenCacheEntries]]
+  * classes instead of 100, set by [[Session.local]] since it is a static
+  * conf), so applying the default profile changes NOTHING about the
+  * benched plans — SessionPostureSpec pins that. Every posture knob is
   * env-overridable (`SPARK_GRAFT_*`) for deployment tuning without a
   * rebuild.
   *
@@ -81,11 +83,26 @@ object Posture {
 /** SparkSession factory for tests, Verify, Bench and ad-hoc runs.
   *
   * UTC timezone (oracle parity with DuckDB), AQE on, shuffle partitions
-  * sized to local cores rather than the 200 default. On a real cluster the
-  * same settings apply through [[Posture.cluster]], with AQE coalescing
-  * handling the oversize.
+  * sized to local cores rather than the 200 default, and a codegen cache
+  * that holds a pass's generated classes ([[CodegenCacheEntries]]). On a
+  * real cluster the same settings apply through [[Posture.cluster]], with
+  * AQE coalescing handling the oversize.
   */
 object Session {
+  /** `spark.sql.codegen.cache.maxEntries`: how many compiled classes
+    * Spark's Janino cache keeps (LRU, default 100). In local mode a
+    * whole-stage class takes two entries, because the key pairs the code
+    * with the thread's class loader and the driver and the executor task
+    * threads use different loaders; q220 plus q297 then need ~110 entries
+    * a pass, and at 100 a warm pass recompiled 17–53 classes per query.
+    * The cache is sized once per JVM, by the first session that generates
+    * code, so every session built here (and any spec building its own)
+    * uses this constant. Recompiles the cache cannot save are fresh code
+    * text, such as a Limit's JVM-global `_limit_counter_<n>` field:
+    * emptiness probes use `hasRows()` (graft.operators), which plans no
+    * Limit. */
+  val CodegenCacheEntries = 1000
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
       posture: Posture = null): SparkSession = {
     val p = Posture.fromEnv(
@@ -98,6 +115,9 @@ object Session {
         sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_warehouse")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // static conf: a runtime `spark.conf.set` throws, so it stays out
+      // of Posture.confs
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     p.confs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

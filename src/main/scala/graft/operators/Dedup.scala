@@ -502,10 +502,10 @@ object Dedup {
         .barrier()
       val changed = next.as("n")
         .join(labels.as("p"), col("n.id") === col("p.id"))
-        .filter(col("n.component") =!= col("p.component")).limit(1).count()
+        .filter(col("n.component") =!= col("p.component")).hasRows()
       labels.unpersist()
       labels = next
-      done = changed == 0
+      done = !changed
       i += 1
     }
     edges.unpersist()

@@ -80,7 +80,7 @@ object Graph {
     // a graph with no dangling nodes (every symmetrized graph) skips
     // the per-iteration mass aggregate entirely: sum over the empty
     // set IS the literal 0.0, so the short-circuit is bit-exact
-    val hasDangling = danglingNodes.limit(1).count() > 0
+    val hasDangling = danglingNodes.hasRows()
 
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     val kept = scala.collection.mutable.ArrayBuffer[DataFrame]()
@@ -157,7 +157,7 @@ object Graph {
     val eDst = eSrc.repartition(col("__dst")).cache()
     val nodes = eSrc.select(col("__src").as("node"))
       .union(eSrc.select(col("__dst"))).distinct().cache()
-    require(nodes.limit(1).count() > 0, "empty graph")
+    require(nodes.hasRows(), "empty graph")
 
     var hubs = nodes.withColumn("hub", lit(1.0))
     var auths: DataFrame = null
@@ -408,7 +408,7 @@ object Graph {
     * Each level's output is an eager `localCheckpoint` — the visited
     * set is read by every later level, and without the cut its lineage
     * would nest one join+union deeper per level. The per-level empty-
-    * frontier probe is a `limit(1)` scalar, not a data-sized collect.
+    * frontier probe is `hasRows()`, not a data-sized collect.
     */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
@@ -427,7 +427,7 @@ object Graph {
       .barrier()
     var frontier = visited.select(col("node"))
     var depth = 0
-    while (depth < maxDepth && frontier.limit(1).count() > 0) {
+    while (depth < maxDepth && frontier.hasRows()) {
       depth += 1
       val next = e.join(frontier.withColumnRenamed("node", "__src"), "__src")
         .select(col("__dst").as("node")).distinct()
@@ -463,7 +463,7 @@ object Graph {
       .barrier()
     var frontier = visited.select(col("seed"), col("node"))
     var depth = 0
-    while (depth < maxDepth && frontier.limit(1).count() > 0) {
+    while (depth < maxDepth && frontier.hasRows()) {
       depth += 1
       val next = e
         .join(frontier.withColumnRenamed("node", "__src"), "__src")
@@ -491,7 +491,7 @@ object Graph {
     * only; the survivors frame is |nodes|-sized). Every round's edge
     * set is an eager `localCheckpoint` — the peel is data-dependent in
     * depth, and without the cut lineage would nest one join deeper per
-    * round. The fixed-point probe is a `limit(1)` scalar per round;
+    * round. The fixed-point probe is one `hasRows()` job per round;
     * rounds are bounded by |nodes| but in practice by the graph's
     * degeneracy ordering depth (tens, not thousands).
     *
@@ -518,8 +518,7 @@ object Graph {
         .groupBy(col("node")).agg(count(lit(1)).as("__deg"))
         .barrier()
       val keep = deg.filter(col("__deg") >= k).select(col("node"))
-      val dropped = deg.filter(col("__deg") < k).limit(1).count()
-      if (dropped == 0) done = true
+      if (!deg.filter(col("__deg") < k).hasRows()) done = true
       else e = e
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
@@ -710,7 +709,7 @@ object Graph {
     * equivalent to enumerating all ≤ maxHops time-respecting paths.
     * Same Spark shape as [[weightedSssp]]: edges hash-partitioned once,
     * per-round shuffle is the \|nodes\|-sized arrival table,
-    * localCheckpoint lineage cuts, limit(1) fixed-point probe.
+    * localCheckpoint lineage cuts, `hasRows()` fixed-point probe.
     *
     * `seeds` start at arrival `Long.MinValue` (reported as arr = null);
     * returns `(node, arr)` for every node reachable within the hop
@@ -742,10 +741,10 @@ object Graph {
       val next = arr.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("arr")).as("arr"))
         .barrier()
-      converged = next.as("n")
+      converged = !next.as("n")
         .join(arr.as("p"), col("n.node") === col("p.node"), "left_outer")
         .filter(col("p.node").isNull || col("n.arr") < col("p.arr"))
-        .limit(1).count() == 0
+        .hasRows()
       arr = next
     }
     e.unpersist(blocking = false)
@@ -771,8 +770,7 @@ object Graph {
     * partitioning-independent — never double. Each round ends in an
     * eager `localCheckpoint` (same O(1)-lineage discipline as
     * [[pageRank]]/[[bfsDistances]]); early exit when a round changes
-    * nothing, probed with a `limit(1)` scalar, not a data-sized
-    * collect.
+    * nothing, probed with `hasRows()`, not a data-sized collect.
     *
     * Returns `(node, dist)` for every node reachable within the hop
     * budget (seeds at dist 0). */
@@ -815,10 +813,10 @@ object Graph {
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
         .barrier()
       // fixed point: no node improved and no new node appeared
-      converged = next.as("n")
+      converged = !next.as("n")
         .join(dist.as("p"), col("n.node") === col("p.node"), "left_outer")
         .filter(col("p.node").isNull || col("n.dist") < col("p.dist"))
-        .limit(1).count() == 0
+        .hasRows()
       dist = next
     }
     e.unpersist(blocking = false)

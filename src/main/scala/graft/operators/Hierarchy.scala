@@ -62,8 +62,7 @@ object Hierarchy {
     // cycle): an ancestor still pointing at a non-root is not a root
     val roots = state.filter(col("depth") === 0)
       .select(col("node").as("anc"))
-    val unresolved = state.join(roots, Seq("anc"), "left_anti").limit(1).count()
-    require(unresolved == 0,
+    require(!state.join(roots, Seq("anc"), "left_anti").hasRows(),
       s"hierarchy did not resolve within maxDepth=$maxDepth (deeper tree or cycle)")
     state.select(col("node"), col("anc").as("root"), col("depth"))
   }

@@ -53,5 +53,19 @@ package object operators {
       if (reliableOn(df)) df.checkpoint() else df.localCheckpoint()
     def barrierLazy(): DataFrame =
       if (reliableOn(df)) df.checkpoint(false) else df.localCheckpoint(false)
+
+    /** True when the frame has at least one row: the emptiness probe of
+      * every fixed-point loop. One job (after any shuffle stages the plan
+      * needs); each task stops at its first row. Not `limit(1).count()`:
+      * a Limit's generated code names its counter `_limit_counter_<n>`
+      * with `n` drawn from a JVM-global id, so every probe is new code
+      * text that misses the codegen cache and recompiles. Not
+      * `Dataset.isEmpty` either: it takes the `executeTake` path, which on
+      * an empty frame of P partitions runs about log₄P jobs — and a
+      * fixed-point loop's last probe is always empty. */
+    def hasRows(): Boolean =
+      df.queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(it.hasNext))
+        .collect().contains(true)
   }
 }

@@ -46,4 +46,18 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(profile.shufWrite.sum > 0 && profile.shufRead.sum > 0)
     } finally s.sparkContext.removeSparkListener(profile)
   }
+
+  test("the profile counts a query's codegen compiles, and a warm rerun compiles 0") {
+    val profile = new Harness.Profile
+    // an expression no other test plans: its stage is new code
+    def run(): Unit = assert(Harness.timedNoop(spark, "spec", "codegen")(
+      spark.range(0, 16, 1, 2).selectExpr("id * 7919 + 104729 AS x")) >= 0)
+    run()
+    val n = profile.codegenCompiles
+    assert(n > 0, "a new stage compiled nothing")
+    assert(profile.json.endsWith(s""","codegen_compiles":$n}"""), profile.json)
+    profile.reset()
+    run()
+    assert(profile.codegenCompiles === 0L)
+  }
 }

@@ -17,6 +17,9 @@ class TopKRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    // the codegen cache is sized once per JVM, by the first session that
+    // generates code: keep it the same whichever suite runs first
+    .config("spark.sql.codegen.cache.maxEntries", Session.CodegenCacheEntries.toLong)
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
