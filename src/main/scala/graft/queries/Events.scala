@@ -1,9 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.sources.{Tables => T}
 import graft.operators.AsOf
+import graft.streaming.Streams
 
 /** Event-stream suite: JSON extraction, event-time windows, sessionization,
   * exact + sketch statistics, and a true Structured Streaming query
@@ -95,20 +95,16 @@ object Events {
     }, None),
 
     // True Structured Streaming: file source → windowless agg → memory sink,
-    // drained with Trigger.AvailableNow (the reference's drain-on-close).
+    // run to its end by Streams.drain (the reference's drain-on-close).
     Q("q39_stream_agg", (s, d) => {
       import s.implicits._
       // raw on-disk schema (ts stays a nanos long; unused by this agg)
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_stream_${System.nanoTime()}"
       // file stream source wants a directory/glob, not a bare file path
-      val query = s.readStream.schema(schema).parquet(s"$d/events.*")
+      val counts = s.readStream.schema(schema).parquet(s"$d/events.*")
         .groupBy($"event_type")
         .agg(count(lit(1)).as("n"), round(sum($"value".cast("decimal(18,2)")).cast("double"), 2).as("sum_value"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"event_type")
+      Streams.drain(counts, "complete").orderBy($"event_type")
     }, Some("""
       SELECT event_type, count(*) AS n, round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
       FROM events GROUP BY event_type ORDER BY event_type""")),

@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Dedup, Similarity, TimeSeries}
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-6 fourth wave: OHLC resampling, label-centroid geometry, and
   * time-weighted averages.
@@ -76,24 +76,20 @@ object Round12 {
 
     // the SAME OHLC operator shape running as a stream: file source →
     // keyed min_by/max_by aggregate → complete-mode memory sink drained
-    // with AvailableNow — one downsampling definition serving batch
+    // to its end — one downsampling definition serving batch
     // (q190) and streaming ingestion alike
     Q("q193_stream_ohlc", (s, d) => {
       import s.implicits._
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_stream_ohlc_${System.nanoTime()}"
       val stream = T.withEventTs(
         s.readStream.schema(schema).parquet(s"$d/events.*"))
-      val query = stream
+      val bars = stream
         .groupBy($"user_id", date_trunc("week", $"ts").as("period"))
         .agg(min_by($"value", struct($"ts", $"event_id")).as("open"),
           max($"value").as("high"), min($"value").as("low"),
           max_by($"value", struct($"ts", $"event_id")).as("close"),
           count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"user_id", $"period")
+      Streams.drain(bars, "complete").orderBy($"user_id", $"period")
     }, Some("""
       SELECT user_id, date_trunc('week', ts) AS period,
              arg_min(value, ts) AS open, max(value) AS high,

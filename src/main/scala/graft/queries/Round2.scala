@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Dedup, Quantiles, Scale}
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-2 surface additions: dedup group-forming (connected components),
   * TF-IDF, binned range join, the remaining analytic window functions,
@@ -218,22 +218,15 @@ object Round2 {
       FROM f ORDER BY doc_id, frame_idx""")),
 
     // streaming exact dedup: dropDuplicates as a stateful streaming op,
-    // drained with AvailableNow — the incremental form of q24's batch dedup
+    // drained to its end — the incremental form of q24's batch dedup
     Q("q73_stream_dedup", (s, d) => {
       import s.implicits._
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_sdedup_${System.nanoTime()}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val query = s.readStream.schema(schema).parquet(s"$d/events.*")
-          .select($"user_id", $"event_type")
-          .dropDuplicates("user_id", "event_type")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn).orderBy($"user_id", $"event_type")
+      val deduped = s.readStream.schema(schema).parquet(s"$d/events.*")
+        .select($"user_id", $"event_type")
+        .dropDuplicates("user_id", "event_type")
+      Streams.drain(deduped, "append", "spark.sql.shuffle.partitions" -> "8")
+        .orderBy($"user_id", $"event_type")
     }, Some("""
       SELECT DISTINCT user_id, event_type FROM events
       ORDER BY user_id, event_type""")),
@@ -324,7 +317,7 @@ object Round2 {
       ORDER BY user_id""")),
 
     // stream-stream inner join with watermarks and an event-time range
-    // constraint, drained with AvailableNow: each purchase joins signups
+    // constraint, drained to its end: each purchase joins signups
     // of the same user within the preceding hour. Inner joins emit each
     // qualifying pair exactly once, so the drained result equals the
     // batch join — which is the oracle
@@ -339,31 +332,20 @@ object Round2 {
       val purchases = stream.filter($"event_type" === "purchase")
         .select($"user_id".as("p_user"), $"ts".as("p_ts"), $"event_id".as("p_event"))
         .withWatermark("p_ts", "1 hour")
-      val qn = s"graft_ssj_${System.nanoTime()}"
-      // state partition count is fixed at query start from shuffle
-      // partitions; a drained micro-benchmark stream wants few state
-      // stores, not one per core (restored after the drain)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      // inner stream-stream joins emit matches within the data batch;
-      // the trailing no-data batch only advances the watermark for state
-      // eviction, irrelevant to a drained run
-      val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      try {
-        val q = purchases.join(signups,
-            $"p_user" === $"s_user" &&
-              $"s_ts" <= $"p_ts" && $"s_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR"))
-          .select($"p_user".as("user_id"), $"p_event", $"s_event")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prev)
-        s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      }
-      s.table(qn).orderBy($"user_id", $"p_event", $"s_event")
+      val joined = purchases.join(signups,
+          $"p_user" === $"s_user" &&
+            $"s_ts" <= $"p_ts" && $"s_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR"))
+        .select($"p_user".as("user_id"), $"p_event", $"s_event")
+      Streams.drain(joined, "append",
+          // state partition count is fixed at query start from shuffle
+          // partitions; a drained micro-benchmark stream wants few state
+          // stores, not one per core
+          "spark.sql.shuffle.partitions" -> "8",
+          // inner stream-stream joins emit matches within the data batch;
+          // the trailing no-data batch only advances the watermark for
+          // state eviction, irrelevant to a drained run
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+        .orderBy($"user_id", $"p_event", $"s_event")
     }, Some("""
       SELECT p.user_id, p.event_id AS p_event, s.event_id AS s_event
       FROM events p JOIN events s

@@ -1,11 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TDigestAgg
 import graft.operators.Quantiles
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-6 fourteenth wave: streaming drift monitor, t-digest
   * quantiles, period-over-period movers.
@@ -17,7 +17,7 @@ object Round22 {
     // q223's PSI as a STREAMING monitor: baseline deciles from the
     // static pre-cutoff orders (bounded 1-row metadata, inlined as
     // literals), the post-cutoff stream binned in complete mode, PSI
-    // folded after AvailableNow drain — the oracle is the same batch
+    // folded after the drain — the oracle is the same batch
     // replay, so the hash match proves stream ≡ batch for the monitor
     Q("q227_stream_psi", (s, d) => {
       import s.implicits._
@@ -32,14 +32,10 @@ object Round22 {
       val bucket = bounds.foldLeft(lit(1))((acc, b) =>
         acc + (v > lit(b)).cast("int"))
       val schema = o.schema
-      val qn = s"graft_stream_psi_${System.nanoTime()}"
-      val query = s.readStream.schema(schema).parquet(s"$d/orders.*")
+      val binned = s.readStream.schema(schema).parquet(s"$d/orders.*")
         .filter($"o_orderdate" >= cutoff)
         .groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n_b"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      val cntB = s.table(qn)
+      val cntB = Streams.drain(binned, "complete")
       val cntA = o.filter($"o_orderdate" < cutoff)
         .groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n_a"))
       val spine = s.range(1, 11).select($"id".cast("int").as("bucket"))

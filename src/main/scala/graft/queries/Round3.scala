@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Mixing, Quantiles, TextAnalysis}
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-3 surface additions (q84–q100): multi-column and
   * high-cardinality exact quantiles, Gopher-style repetition filtering,
@@ -46,9 +47,9 @@ object Round3 {
     * join every micro-batch, so what sits there decides the per-batch
     * cost: reading the materialized (id, band, bucket) layout is
     * batch-sized work; re-shingling the corpus (the pre-round-4 shape)
-    * was corpus-sized work per batch. Returns the drained memory-sink
-    * table name and the terminated query for plan inspection. */
-  private[graft] def streamCandidates(s: SparkSession, d: String): (String, StreamingQuery) = {
+    * was corpus-sized work per batch. Returns the terminated query, for
+    * plan inspection; its `name` is the drained memory-sink table's. */
+  private[graft] def streamCandidates(s: SparkSession, d: String): StreamingQuery = {
     import s.implicits._
     val corpusBands = s.read.parquet(corpusBandLayout(s, d))
       .select($"id".as("a_id"), $"band", $"bucket")
@@ -57,13 +58,9 @@ object Round3 {
       .filter($"doc_id" % 10 === 0)
     val newBands = graft.operators.Dedup.bandedSignatures(fresh, "doc_id", "text")
       .select($"id".as("b_id"), $"band", $"bucket")
-    val qn = s"graft_stream_inc_${System.nanoTime()}"
-    val query = newBands.join(corpusBands, Seq("band", "bucket"))
+    val pairs = newBands.join(corpusBands, Seq("band", "bucket"))
       .groupBy($"a_id", $"b_id").count()
-      .writeStream.format("memory").queryName(qn)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    (qn, query)
+    Streams.runToEnd(pairs)(Streams.memorySink(_, "complete"))
   }
 
   val all: Seq[Q] = Seq(
@@ -161,20 +158,15 @@ object Round3 {
     // "enrich the firehose with reference data" shape
     Q("q88_stream_static_join", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       val schema = T.table(s, d, "events").schema
       val dim = broadcast(T.customer(s, d)
         .select($"c_custkey".as("user_id"), $"c_mktsegment"))
-      val qn = s"graft_stream_ss_${System.nanoTime()}"
-      val query = s.readStream.schema(schema).parquet(s"$d/events.*")
+      val enriched = s.readStream.schema(schema).parquet(s"$d/events.*")
         .select($"user_id", $"event_type", $"value")
         .join(dim, "user_id")
         .groupBy($"c_mktsegment", $"event_type")
         .agg(count(lit(1)).as("n"), round(sum($"value".cast("decimal(18,2)")).cast("double"), 2).as("sum_value"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"c_mktsegment", $"event_type")
+      Streams.drain(enriched, "complete").orderBy($"c_mktsegment", $"event_type")
     }, Some("""
       SELECT c_mktsegment, event_type, count(*) AS n,
              round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
@@ -400,9 +392,9 @@ object Round3 {
     Q("q97_stream_incremental_dedup", (s, d) => {
       import s.implicits._
       val docs = T.documents(s, d)
-      val (qn, _) = streamCandidates(s, d)
+      val candidates = s.table(streamCandidates(s, d).name)
       val sets = graft.operators.Dedup.shingleSets(docs, "doc_id", "text")
-      s.table(qn)
+      candidates
         .join(sets.select($"id".as("a_id"), $"shingles".as("sa")), "a_id")
         .join(sets.select($"id".as("b_id"), $"shingles".as("sb")), "b_id")
         .select($"a_id", $"b_id",

@@ -1,9 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-6 twenty-fourth wave: more stream ≡ batch proofs. */
 object Round32 {
@@ -21,18 +21,14 @@ object Round32 {
       val schema = T.table(s, d, "lineitem").schema
       val orders = T.orders(s, d)
         .select($"o_orderkey", to_date($"o_orderdate").as("opened"))
-      val qn = s"graft_stream_backlog_${System.nanoTime()}"
       // stream the lineitems; each joins its (static) order's open date
-      val query = s.readStream.schema(schema).parquet(s"$d/lineitem.*")
+      val spans = s.readStream.schema(schema).parquet(s"$d/lineitem.*")
         .select($"l_orderkey".as("o_orderkey"),
           to_date($"l_shipdate").as("shipped"))
         .join(orders, "o_orderkey") // stream-static join
         .groupBy($"o_orderkey")
         .agg(min($"opened").as("opened"), max($"shipped").as("closed"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn)
+      Streams.drain(spans, "complete")
         // backwards spans (a lineitem shipped before its order date)
         // would explode a DESCENDING sequence — drop them, like
         // dailyConcurrency's guard and the oracle's empty BETWEEN
@@ -60,8 +56,7 @@ object Round32 {
     Q("q252_stream_expectations", (s, d) => {
       import s.implicits._
       val schema = T.table(s, d, "orders").schema
-      val qn = s"graft_stream_expect_${System.nanoTime()}"
-      val query = s.readStream.schema(schema).parquet(s"$d/orders.*")
+      val violations = s.readStream.schema(schema).parquet(s"$d/orders.*")
         .agg(count(lit(1)).as("__n"),
           sum(when($"o_custkey".isNull, 1L).otherwise(0L))
             .as("custkey_notnull"),
@@ -69,10 +64,7 @@ object Round32 {
             .as("totalprice_upper"),
           sum(when(!$"o_orderstatus".isin("F", "O", "P"), 1L)
             .otherwise(0L)).as("status_domain"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn)
+      Streams.drain(violations, "complete")
         .selectExpr("""stack(3,
           'custkey_notnull', custkey_notnull,
           'status_domain', status_domain,

@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Metrics, Mixing, TimeSeries}
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-6 twenty-eighth wave: streaming deterministic sampling,
   * decision-stump induction, Markov absorption probabilities.
@@ -21,16 +21,12 @@ object Round36 {
     Q("q266_stream_sample", (s, d) => {
       import s.implicits._
       val schema = T.table(s, d, "documents").schema
-      val qn = s"graft_stream_sample_${System.nanoTime()}"
       val stream = s.readStream.schema(schema).parquet(s"$d/documents.*")
-      val query = Mixing.stratifiedSample(stream, "lang", "doc_id",
+      val kept = Mixing.stratifiedSample(stream, "lang", "doc_id",
           Map("en" -> 0.3, "zh" -> 0.6), defaultFraction = 0.05)
         .groupBy($"lang")
         .agg(count(lit(1)).as("n_kept"), sum($"n_chars").as("chars"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"lang")
+      Streams.drain(kept, "complete").orderBy($"lang")
     }, Some("""
       SELECT lang, count(*) AS n_kept, sum(n_chars) AS chars
       FROM documents

@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Metrics, Mixing}
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-6 twenty-ninth wave: Lorenz curve, streaming heavy hitters,
   * temporal embargo split.
@@ -64,16 +64,12 @@ object Round37 {
     Q("q270_stream_heavy_hitters", (s, d) => {
       import s.implicits._
       val schema = T.table(s, d, "lineitem").schema
-      val qn = s"graft_stream_hh_${System.nanoTime()}"
-      val query = s.readStream.schema(schema).parquet(s"$d/lineitem.*")
+      val counts = s.readStream.schema(schema).parquet(s"$d/lineitem.*")
         .groupBy($"l_partkey")
         .agg(count(lit(1)).as("n"),
           sum($"l_quantity".cast("decimal(18,2)"))
             .cast("decimal(18,2)").as("qty"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"n".desc, $"l_partkey".asc).limit(25)
+      Streams.drain(counts, "complete").orderBy($"n".desc, $"l_partkey".asc).limit(25)
     }, Some("""
       SELECT l_partkey, count(*) AS n,
              CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Decontaminate, Dedup, Fuzzy, Graph, Merge, Mixing, Pca, TextAnalysis}
 import graft.sources.{Tables => T}
+import graft.streaming.{StatefulOps, Streams}
 
 /** Round-5 surface additions: temperature-scaled domain mixing (the
   * multilingual/domain data-mixing recipe) and document-level
@@ -362,20 +363,15 @@ object Round5 {
     // window family's streaming side next to q39/q77/q98's shapes
     Q("q125_session_stream", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_sess_${System.nanoTime()}"
       val ev = T.withEventTs(
         s.readStream.schema(schema).parquet(s"$d/events.*"))
-      val query = ev
+      val sessions = ev
         .groupBy($"user_id", session_window($"ts", "30 minutes"))
         .agg(count(lit(1)).as("n_events"), round(sum($"value".cast("decimal(18,2)")).cast("double"), 2).as("sum_value"))
         .select($"user_id", $"session_window.start".as("session_start"),
           $"n_events", $"sum_value")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"user_id", $"session_start")
+      Streams.drain(sessions, "complete").orderBy($"user_id", $"session_start")
     }, Some("""
       WITH flags AS (
         SELECT user_id, ts, value,
@@ -640,22 +636,14 @@ object Round5 {
       val purchases = stream.filter($"event_type" === "purchase")
         .select($"user_id".as("p_user"), $"ts".as("p_ts"), $"event_id".as("p_event"))
         .withWatermark("p_ts", "1 hour")
-      val qn = s"graft_ssoj_${System.nanoTime()}"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val q = purchases.join(signups,
-            $"p_user" === $"s_user" &&
-              $"s_ts" <= $"p_ts" && $"s_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR"),
-            "leftOuter")
-          .select($"p_user".as("user_id"), $"p_event",
-            coalesce($"s_event", lit(-1L)).as("s_event"))
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.table(qn).orderBy($"user_id", $"p_event", $"s_event")
+      val joined = purchases.join(signups,
+          $"p_user" === $"s_user" &&
+            $"s_ts" <= $"p_ts" && $"s_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR"),
+          "leftOuter")
+        .select($"p_user".as("user_id"), $"p_event",
+          coalesce($"s_event", lit(-1L)).as("s_event"))
+      Streams.drain(joined, "append", "spark.sql.shuffle.partitions" -> "8")
+        .orderBy($"user_id", $"p_event", $"s_event")
     }, Some("""
       WITH p AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
       s AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'signup'),
@@ -888,23 +876,15 @@ object Round5 {
     // (counts are monotone)
     Q("q128_map_state", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
-      graft.streaming.StatefulOps.withRocksDb(s) {
-        val schema = T.table(s, d, "events").schema
-        val qn = s"graft_maps_${System.nanoTime()}"
-        val src = s.readStream.schema(schema).parquet(s"$d/events.*")
-          .select($"user_id".cast("long"), $"event_type".cast("string"))
-          .as[(Long, String)]
-        val query = graft.streaming.StatefulOps.categoryCounts(src)
-          .toDF("user_id", "event_type", "n")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-        s.table(qn)
-          .groupBy($"user_id", $"event_type")
-          .agg(max($"n").as("n_events"))
-          .orderBy($"user_id", $"event_type")
-      }
+      val schema = T.table(s, d, "events").schema
+      val src = s.readStream.schema(schema).parquet(s"$d/events.*")
+        .select($"user_id".cast("long"), $"event_type".cast("string"))
+        .as[(Long, String)]
+      val changelog = StatefulOps.categoryCounts(src).toDF("user_id", "event_type", "n")
+      Streams.drain(changelog, "update", StatefulOps.RocksDbProvider)
+        .groupBy($"user_id", $"event_type")
+        .agg(max($"n").as("n_events"))
+        .orderBy($"user_id", $"event_type")
     }, Some("""
       SELECT user_id, event_type, count(*) AS n_events
       FROM events GROUP BY user_id, event_type
@@ -912,30 +892,22 @@ object Round5 {
 
     // Spark 4 transformWithState (State API v2): per-user running
     // count+sum as typed ValueState cells on the RocksDB store, update-
-    // mode changelog drained with AvailableNow; the final per-key rows
+    // mode changelog drained to its end; the final per-key rows
     // must equal the batch aggregate
     Q("q126_transform_with_state", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
-      graft.streaming.StatefulOps.withRocksDb(s) {
-        val schema = T.table(s, d, "events").schema
-        val qn = s"graft_tws_${System.nanoTime()}"
-        val src = s.readStream.schema(schema).parquet(s"$d/events.*")
-          .select($"user_id".cast("long"), $"value".cast("double"))
-          .as[(Long, Double)]
-        val query = graft.streaming.StatefulOps.runningTotals(src)
-          .toDF("user_id", "n_events", "sum_value")
-          .writeStream.format("memory").queryName(qn)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        query.awaitTermination()
-        // update mode emits a changelog row per key per batch: the final
-        // state is each key's max running count (counts are monotone)
-        s.table(qn)
-          .groupBy($"user_id")
-          .agg(max($"n_events").as("n_events"),
-            round(max_by($"sum_value", $"n_events"), 2).as("sum_value"))
-          .orderBy($"user_id")
-      }
+      val schema = T.table(s, d, "events").schema
+      val src = s.readStream.schema(schema).parquet(s"$d/events.*")
+        .select($"user_id".cast("long"), $"value".cast("double"))
+        .as[(Long, Double)]
+      val changelog = StatefulOps.runningTotals(src).toDF("user_id", "n_events", "sum_value")
+      // update mode emits a changelog row per key per batch: the final
+      // state is each key's max running count (counts are monotone)
+      Streams.drain(changelog, "update", StatefulOps.RocksDbProvider)
+        .groupBy($"user_id")
+        .agg(max($"n_events").as("n_events"),
+          round(max_by($"sum_value", $"n_events"), 2).as("sum_value"))
+        .orderBy($"user_id")
     }, Some("""
       SELECT user_id, count(*) AS n_events, round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_value
       FROM events GROUP BY user_id ORDER BY user_id""")),
@@ -951,19 +923,14 @@ object Round5 {
     // operator's point)
     Q("q127_dedup_watermark", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_ddw_${System.nanoTime()}"
-      val query = T.withEventTs(
+      val deduped = T.withEventTs(
           s.readStream.schema(schema).parquet(s"$d/events.*"))
         .withWatermark("ts", "1 hour")
         .select($"user_id", $"event_type", $"ts")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select($"user_id", $"event_type")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      s.table(qn).orderBy($"user_id", $"event_type")
+      Streams.drain(deduped, "append").orderBy($"user_id", $"event_type")
     }, Some("""
       SELECT DISTINCT user_id, event_type FROM events
       ORDER BY user_id, event_type""")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Hypothesis
 import graft.sources.{Tables => T}
+import graft.streaming.Streams
 
 /** Round-7 fourth wave: Jonckheere–Terpstra ordered-alternative test (the
   * dose-response companion to q308's Kruskal–Wallis), Fellegi–Sunter
@@ -306,22 +307,17 @@ object Round58 {
       FROM pr""")),
 
     // streaming Page–Hinkley: the daily exact-decimal reduce runs as a
-    // Structured Streaming complete-mode aggregation (AvailableNow over
-    // the event files), then the PH recursion reads the streamed table —
+    // Structured Streaming complete-mode aggregation (drained over the
+    // event files), then the PH recursion reads the streamed table —
     // sharing q314's oracle is the stream ≡ batch equivalence proof, the
     // q227-PSI pattern applied to the drift monitor.
     Q("q328_stream_page_hinkley", (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.streaming.Trigger
       val schema = T.table(s, d, "events").schema
-      val qn = s"graft_stream_ph_${System.nanoTime()}"
-      val q = s.readStream.schema(schema).parquet(s"$d/{events.parquet}")
+      val daily = s.readStream.schema(schema).parquet(s"$d/{events.parquet}")
         .groupBy($"event_type", to_date($"ts").as("day"))
         .agg(sum($"value".cast("decimal(18,2)")).as("x"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      Hypothesis.pageHinkley(s.table(qn), "event_type", "day", "x",
+      Hypothesis.pageHinkley(Streams.drain(daily, "complete"), "event_type", "day", "x",
           delta = 0.0, lambda = 500.0)
         .orderBy($"event_type")
     }, Some("""

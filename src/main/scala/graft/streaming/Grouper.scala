@@ -203,7 +203,7 @@ final class Grouper[A, B] private (
     Encoders.tuple(Encoders.scalaLong, encA)
 
   private val lanes: Array[(WakeableMemoryStream[(Long, A)], StreamingQuery)] =
-    Grouper.withLocalCheckpointLogs(spark)(Array.tabulate(parallelism) { lane =>
+    LocalCheckpointFileManager.scoped(spark)(Array.tabulate(parallelism) { lane =>
       val source = new WakeableMemoryStream[(Long, A)](spark, 100L)(reqEnc)
       val query = source.toDS()
         .writeStream
@@ -387,22 +387,6 @@ final class Grouper[A, B] private (
 }
 
 object Grouper {
-
-  private val checkpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
-
-  // `StreamExecution` clones the session conf when a query is constructed
-  // and its offset and commit logs read their Hadoop conf from that clone,
-  // so the class only has to be set while the lanes start. A class the
-  // user set is left alone; the lock keeps two starts from seeing each
-  // other's setting as the user's.
-  private def withLocalCheckpointLogs[T](spark: SparkSession)(startLanes: => T): T =
-    synchronized {
-      if (spark.conf.getOption(checkpointManagerKey).isDefined) startLanes
-      else {
-        spark.conf.set(checkpointManagerKey, classOf[LocalCheckpointFileManager].getName)
-        try startLanes finally spark.conf.unset(checkpointManagerKey)
-      }
-    }
 
   private def validate(capacity: Int, intervalMs: Option[Long], parallelism: Int): Unit = {
     require(capacity > 0, s"capacity must be a positive integer: $capacity")

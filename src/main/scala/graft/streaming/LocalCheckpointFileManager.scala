@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 
 /** Spark's default checkpoint file manager with the write path of `file:`
@@ -46,4 +47,32 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
         Files.move(s, d, StandardCopyOption.ATOMIC_MOVE); ()
       case _ => super.renameTempFile(src, dst, overwriteIfPossible)
     }
+}
+
+object LocalCheckpointFileManager {
+
+  private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Runs `start` with `confs` set and with this manager as the session's
+    * checkpoint file manager, then restores every setting. `StreamExecution`
+    * clones the session conf when a query is constructed, and its offset,
+    * commit and state-store files, shuffle partitions, state-store provider
+    * and no-data batch flag are read from that clone, so a query needs the
+    * scope only while it starts; a file source's log alone is made with the
+    * conf of the session that defined the source, while the query
+    * initializes. A manager class the user set is left alone; the lock
+    * keeps two starts from seeing each other's settings as the user's. */
+  def scoped[T](spark: SparkSession, confs: (String, String)*)(start: => T): T = synchronized {
+    val manager =
+      if (spark.conf.getOption(managerKey).isDefined) Nil
+      else Seq(managerKey -> classOf[LocalCheckpointFileManager].getName)
+    val settings = confs ++ manager
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try start
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -143,7 +143,7 @@ object StatefulOps {
 
   /** Wire [[RunningTotals]] onto a keyed stream. The caller must run the
     * query with the RocksDB state store provider (transformWithState
-    * requires it — see [[withRocksDb]]). */
+    * requires it — see [[RocksDbProvider]]). */
   def runningTotals(ds: Dataset[(Long, Double)]): Dataset[(Long, Long, Double)] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_._1)
@@ -187,18 +187,9 @@ object StatefulOps {
       .transformWithState(new CategoryCounts, TimeMode.None(), OutputMode.Update())
   }
 
-  /** Run `body` with the RocksDB state store provider set, restoring the
-    * previous provider after — transformWithState refuses the default
+  /** The RocksDB state store provider, as a conf for [[Streams]] to set
+    * while a query starts — transformWithState refuses the default
     * HDFS-backed provider. */
-  def withRocksDb[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  val RocksDbProvider: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 }

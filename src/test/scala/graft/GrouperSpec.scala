@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
@@ -8,18 +7,18 @@ import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.streaming.Grouper
+import graft.ProcessStarts.checkpointForks
+import graft.streaming.{Grouper, Streams}
 
 /** Behavioral contracts of the micro-batch façade, mirroring the
   * reference's test blocks (`/root/reference/test/grouper/core_test.clj`,
@@ -291,31 +290,23 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally g.close()
   }
 
-  // process starts recorded while `body` runs whose stack passes through
-  // a checkpoint file manager
-  private def checkpointForks(body: => Unit): Int = {
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    try body finally rec.stop()
-    val file = Files.createTempFile("grouper-forks", ".jfr")
-    try {
-      rec.dump(file)
-      RecordingFile.readAllEvents(file).asScala.count { e =>
-        e.getStackTrace != null && e.getStackTrace.getFrames.asScala.exists(
-          _.getMethod.getType.getName.contains("CheckpointFileManager"))
-      }
-    } finally { rec.close(); Files.delete(file) }
+  // one lane start and one streaming drain through the shared scope
+  private def startAndDrain() = {
+    flushRun(1)
+    import spark.implicits._
+    val in = MemoryStream[Int](spark)
+    in.addData(1, 2, 3)
+    assert(Streams.drain(in.toDF(), "append").count() == 3)
   }
 
   test("start leaves the session's checkpoint file manager class as it was") {
     assert(spark.conf.getOption(managerKey).isEmpty)
-    flushRun(1)
+    startAndDrain()
     assert(spark.conf.getOption(managerKey).isEmpty, "unset must stay unset")
     val userClass = classOf[FileContextBasedCheckpointFileManager].getName
     spark.conf.set(managerKey, userClass)
     try {
-      flushRun(1)
+      startAndDrain()
       assert(spark.conf.getOption(managerKey).contains(userClass), "a user-set class must stay set")
     } finally spark.conf.unset(managerKey)
   }

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Shims
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.Streams
 
 /** The run loop Bench, PlanDump and ScaleBench share ([[Harness]]) and the
   * per-query counters Bench's warm pass records. */
@@ -25,6 +28,18 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!spark.catalog.tableExists("graft_s_harness"))
     assert(spark.catalog.tableExists("kept_harness"), "hygiene dropped a non-graft_s view")
     spark.catalog.dropTempView("kept_harness")
+  }
+
+  test("hygiene drops the memory-sink table of a drained stream") {
+    import spark.implicits._
+    val in = MemoryStream[Int](spark)
+    in.addData(1, 2, 3)
+    val before = Shims.tempViewNames(spark).toSet
+    assert(Streams.drain(in.toDF(), "append").count() == 3)
+    val tables = Shims.tempViewNames(spark).filterNot(before)
+    assert(tables.size == 1)
+    Harness.hygiene(spark)
+    assert(!spark.catalog.tableExists(tables.head), s"${tables.head} survived hygiene")
   }
 
   test("after the bus drain the profile counts the job exactly, with no sleep") {

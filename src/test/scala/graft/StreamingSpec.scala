@@ -200,7 +200,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // serving a second time reuses the materialized layout as-is
     assert(graft.queries.Round3.corpusBandLayout(spark, sf) == layout)
     assert(success.lastModified() == m0)
-    val (qn, query) = graft.queries.Round3.streamCandidates(spark, sf)
+    val query = graft.queries.Round3.streamCandidates(spark, sf)
     val out = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(out))(query.explain())
     val plan = out.toString
@@ -215,6 +215,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // scanned it a second time to re-sign the corpus per batch)
     assert("minhash_signature".r.findAllIn(plan).size == 1, plan)
     assert("documents\\.parquet".r.findAllIn(plan).size == 1, plan)
-    assert(spark.table(qn).columns.toSet == Set("a_id", "b_id", "count"))
+    assert(spark.table(query.name).columns.toSet == Set("a_id", "b_id", "count"))
   }
 }
