@@ -752,8 +752,11 @@ object BoundedLevenshtein {
     while (i <= n) {
       val from = math.max(1, i - k)
       val to = math.min(m, i + k)
-      java.util.Arrays.fill(cur, inf)
-      if (from == 1) cur(0) = if (i <= k) i else inf
+      // the band reads one cell left of it in this row and the next row
+      // reads one cell right of it: reset those two, not the whole row
+      if (from == 1) cur(0) = (if (i <= k) i else inf)
+      else cur(from - 1) = inf
+      if (to < m) cur(to + 1) = inf
       var best = inf
       var jj = from
       while (jj <= to) {

@@ -80,19 +80,17 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog.getTempViewNames()
 
-  /** Adds `rows` to the `numOutputRows` metric of the scans of `stream` in
-    * the micro-batch `query` is running now (`lastExecution`). Progress
-    * reports read a source's `numInputRows` from that metric, so a source
-    * whose rows reach the batch without the scan running reports them here.
-    * Call it on the query's stream thread, inside the batch. */
-  def addMicroBatchScanRows(query: org.apache.spark.sql.streaming.StreamingQuery,
-      stream: org.apache.spark.sql.connector.read.streaming.SparkDataStream, rows: Long): Unit =
-    query.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-      .streamingQuery.lastExecution.executedPlan.foreach {
-        case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec if s.stream eq stream =>
-          s.metrics("numOutputRows").add(rows)
-        case _ =>
-      }
+  /** Starts `df` as a streaming query into a v1 `sink`
+    * (`StreamingQueryManager.startQuery` is `private[sql]`), with the
+    * arguments `DataStreamWriter` passes for `foreachBatch`: no name, a
+    * temporary checkpoint deleted on stop, append mode, default clock. */
+  def startQuery(df: org.apache.spark.sql.Dataset[_], sink: org.apache.spark.sql.execution.streaming.Sink,
+      trigger: org.apache.spark.sql.streaming.Trigger): org.apache.spark.sql.streaming.StreamingQuery = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val manager = ds.sparkSession.sessionState.streamingQueryManager
+    manager.startQuery(None, None, ds, Map.empty, sink, org.apache.spark.sql.streaming.OutputMode.Append(),
+      useTempCheckpointLocation = true, recoverFromCheckpointLocation = true, trigger = trigger)
+  }
 
   /** Blocks until every listener has processed every event posted so far
     * (`listenerBus` is `private[spark]`). A timeout is reported on stderr,

@@ -10,6 +10,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.graft.Shims
@@ -275,6 +277,11 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!g.isRunning)
   }
 
+  // Catalyst rule runs of `flushRun(20)` on a warm session: the count is
+  // the same from run to run. A lane that handed its batches through
+  // ForeachBatchSink, which re-plans each one as a second Dataset, ran 26,458
+  private val RuleRunsPer20Flushes = 20578L
+
   private val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   // `n` sequential flushes of one item each: at least `n` micro-batches,
@@ -340,6 +347,29 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
       Shims.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get() == 0, s"${jobs.get()} Spark jobs over 20 lane micro-batches")
+  }
+
+  test("lane micro-batches run few Catalyst rules over 20 flushes (rule gate)") {
+    flushRun(1) // so the count does not depend on what ran before in this session
+    val before = RuleExecutor.getCurrentMetrics().numRuns
+    flushRun(20)
+    val runs = RuleExecutor.getCurrentMetrics().numRuns - before
+    assert(runs <= RuleRunsPer20Flushes, s"$runs Catalyst rule runs over 20 lane micro-batches")
+  }
+
+  test("a batch function may run a Spark job on its Dataset") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val g = Grouper.start[Int, Int](spark, ds => {
+      val xs = ds.collect().toSeq
+      // an aggregation with a shuffle, run inside the lane's micro-batch
+      val counted = ds.groupBy(col("value") % 3).count().collect().map(_.getLong(1)).sum
+      require(counted == xs.length, s"counted $counted of ${xs.length} rows")
+      xs.map(_ + 1)
+    }, capacity = 100, intervalMs = Some(20L), parallelism = 4)
+    val fs = (1 to 50).map(g.submit(_))
+    try assert(fs.map(await(_)) == (2 to 51))
+    finally g.close()
+    assert(!g.isRunning)
   }
 
   test("lane progress counts every submitted item as an input row") {

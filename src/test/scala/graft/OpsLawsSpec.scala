@@ -260,11 +260,16 @@ object OpsLawsSpec extends Properties("graft.round6ops") {
 
   private val strPair: Gen[(String, String)] = for {
     a <- Gen.listOfN(12, Gen.oneOf('a', 'b', 'c')).map(_.mkString)
-    // mix of near (edits of a) and far strings
+    // mix of near (edits of a) and far strings; the runs of 1..7
+    // deletions or insertions put the edit path on the band's edge
     b <- Gen.oneOf(
       Gen.listOfN(12, Gen.oneOf('a', 'b', 'c')).map(_.mkString),
       Gen.chooseNum(0, 11).map(i => a.take(i) + "x" + a.drop(i + 1)),
-      Gen.chooseNum(0, 11).map(i => a.take(i) + a.drop(i + 1)))
+      Gen.chooseNum(0, 11).map(i => a.take(i) + a.drop(i + 1)),
+      Gen.chooseNum(0, 12).map(i => a.take(i) + "x" + a.drop(i)),
+      for (d <- Gen.chooseNum(1, 7); i <- Gen.chooseNum(0, 12)) yield a.take(i) + a.drop(i + d),
+      for (d <- Gen.chooseNum(1, 7); i <- Gen.chooseNum(0, 12);
+           ins <- Gen.listOfN(d, Gen.oneOf('a', 'b', 'c', 'x'))) yield a.take(i) + ins.mkString + a.drop(i))
   } yield (a, b)
 
   property("bounded_levenshtein equals min(levenshtein, k+1)") =
@@ -277,6 +282,34 @@ object OpsLawsSpec extends Properties("graft.round6ops") {
           least(levenshtein(col("a"), col("b")), lit(k + 1)).as("full"))
         .collect()
       out.forall(r => r.getInt(0) == r.getInt(1))
+    }
+
+  // the band alone, on the driver: many short two-letter strings, where
+  // near-diagonal paths are common enough to reach the cell left of the
+  // band, which the 12-letter pairs above rarely do
+  private val bandCase: Gen[(String, String, Int)] = {
+    val word = Gen.chooseNum(0, 10).flatMap(Gen.listOfN(_, Gen.oneOf('a', 'b'))).map(_.mkString)
+    for (a <- word; b <- word; k <- Gen.chooseNum(0, 6)) yield (a, b, k)
+  }
+
+  private def fullLevenshtein(a: String, b: String): Int = {
+    var prev = Array.tabulate(b.length + 1)(identity)
+    for (i <- 1 to a.length) {
+      val cur = new Array[Int](b.length + 1)
+      cur(0) = i
+      for (j <- 1 to b.length)
+        cur(j) = math.min(math.min(prev(j), cur(j - 1)) + 1,
+          prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1))
+      prev = cur
+    }
+    prev(b.length)
+  }
+
+  property("BoundedLevenshtein.distance equals min(full DP, k+1)") =
+    forAll(Gen.listOfN(500, bandCase)) { cases =>
+      cases.forall { case (a, b, k) =>
+        graft.functions.BoundedLevenshtein.distance(a, b, k) == math.min(fullLevenshtein(a, b), k + 1)
+      }
     }
 
   // ---- markovAbsorption ≡ in-JVM matrix recursion --------------------------

@@ -207,143 +207,158 @@ class Round4OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // ---- bucketed CDC snapshot ----------------------------------------------
 
+  // runs `body` on a snapshot path inside a new `graft_cdc_<name>` temp
+  // directory, and deletes the directory and all under it afterwards
+  private def withSnapshotPath[T](name: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_cdc_$name")
+    try body(dir.toString + "/snap")
+    finally java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.delete)
+  }
+
   test("bucketed apply rewrites only touched buckets, equals full merge") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
-    val path = Files.createTempDirectory("graft_cdc_spec").toString + "/snap"
-    val base = (1L to 500L).map(i => (i, s"v$i")).toDF("k", "v")
-    Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 8)
+    withSnapshotPath("spec") { path =>
+      val base = (1L to 500L).map(i => (i, s"v$i")).toDF("k", "v")
+      Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 8)
 
-    // record per-bucket file listings before the merge
-    def bucketFiles(b: Int): Set[(String, Long)] = {
-      val dir = Paths.get(path, s"__bucket=$b")
-      if (!Files.exists(dir)) Set.empty
-      else {
-        val s = Files.list(dir)
-        try s.iterator().asScala
-          .filter(_.toString.endsWith(".parquet"))
-          .map(p => (p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
-          .toSet
-        finally s.close()
+      // record per-bucket file listings before the merge
+      def bucketFiles(b: Int): Set[(String, Long)] = {
+        val dir = Paths.get(path, s"__bucket=$b")
+        if (!Files.exists(dir)) Set.empty
+        else {
+          val s = Files.list(dir)
+          try s.iterator().asScala
+            .filter(_.toString.endsWith(".parquet"))
+            .map(p => (p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
+            .toSet
+          finally s.close()
+        }
       }
-    }
-    val before = (0 until 8).map(b => b -> bucketFiles(b)).toMap
+      val before = (0 until 8).map(b => b -> bucketFiles(b)).toMap
 
-    val changes = Seq((3L, "V3", "U", 1L), (7L, "x", "D", 1L), (900L, "new", "U", 1L))
-      .toDF("k", "v", "op", "seq")
-    Merge.applyChangesBucketed(path, changes, Seq("k"), "op", "seq", buckets = 8)
+      val changes = Seq((3L, "V3", "U", 1L), (7L, "x", "D", 1L), (900L, "new", "U", 1L))
+        .toDF("k", "v", "op", "seq")
+      Merge.applyChangesBucketed(path, changes, Seq("k"), "op", "seq", buckets = 8)
 
-    // snapshot content equals the all-at-once merge
-    val got = spark.read.parquet(path).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
-    val want = Merge.applyChanges(base, changes, Seq("k"), "op", "seq")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
-    assert(got == want)
+      // snapshot content equals the all-at-once merge
+      val got = spark.read.parquet(path).select("k", "v")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
+      val want = Merge.applyChanges(base, changes, Seq("k"), "op", "seq")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toSet
+      assert(got == want)
 
-    // untouched buckets keep their exact files; touched ones were rewritten
-    val touchedBuckets = changes.select(pmod(xxhash64($"k"), lit(8L)).cast("int"))
-      .collect().map(_.getInt(0)).toSet
-    (0 until 8).foreach { b =>
-      if (touchedBuckets.contains(b))
-        assert(bucketFiles(b) != before(b), s"touched bucket $b not rewritten")
-      else
-        assert(bucketFiles(b) == before(b), s"untouched bucket $b was rewritten")
+      // untouched buckets keep their exact files; touched ones were rewritten
+      val touchedBuckets = changes.select(pmod(xxhash64($"k"), lit(8L)).cast("int"))
+        .collect().map(_.getInt(0)).toSet
+      (0 until 8).foreach { b =>
+        if (touchedBuckets.contains(b))
+          assert(bucketFiles(b) != before(b), s"touched bucket $b not rewritten")
+        else
+          assert(bucketFiles(b) == before(b), s"untouched bucket $b was rewritten")
+      }
     }
   }
 
   test("an interrupted bucket swap is recovered on the next apply") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_spec3").toString + "/snap"
-    val base = (1L to 100L).map(i => (i, i)).toDF("k", "v")
-    Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
-    // simulate a crash between rename-aside and rename-in: bucket 2's
-    // only copy sits at the hidden .old name, live dir gone
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.rename(new Path(s"$path/__bucket=2"), new Path(s"$path/.__bucket=2.old")))
-    Merge.applyChangesBucketed(path,
-      Seq((1L, 999L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
-    // nothing lost: all 100 keys present, the update applied
-    val got = spark.read.parquet(path).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.size == 100 && got(1L) == 999L && got(2L) == 2L)
+    withSnapshotPath("spec3") { path =>
+      val base = (1L to 100L).map(i => (i, i)).toDF("k", "v")
+      Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
+      // simulate a crash between rename-aside and rename-in: bucket 2's
+      // only copy sits at the hidden .old name, live dir gone
+      val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+      assert(fs.rename(new Path(s"$path/__bucket=2"), new Path(s"$path/.__bucket=2.old")))
+      Merge.applyChangesBucketed(path,
+        Seq((1L, 999L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
+      // nothing lost: all 100 keys present, the update applied
+      val got = spark.read.parquet(path).select("k", "v")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size == 100 && got(1L) == 999L && got(2L) == 2L)
+    }
   }
 
   // ---- snapshot manifest ----------------------------------------------------
 
   test("manifest tracks apply_seq and per-bucket stats across applies") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_m1").toString + "/snap"
-    val base = (1L to 100L).map(i => (i, i)).toDF("k", "v")
-    Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val (s0, m0) = Merge.readManifest(fs, path).get
-    assert(s0 == 0L && m0.values.map(_.rows).sum == 100L)
-    // apply touches exactly key 1's bucket: its entry changes, every
-    // other bucket keeps rows, checksum AND file list bit-for-bit
-    val touched = spark.range(1).select(
-      pmod(xxhash64(lit(1L)), lit(4L)).cast("int")).collect()(0).getInt(0)
-    Merge.applyChangesBucketed(path,
-      Seq((1L, 999L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
-    val (s1, m1) = Merge.readManifest(fs, path).get
-    assert(s1 == 1L)
-    assert(m1(touched) != m0(touched), "touched bucket's manifest entry unchanged")
-    assert((m1 - touched) == (m0 - touched), "untouched manifest entries drifted")
-    assert(m1.values.map(_.rows).sum == 100L)
+    withSnapshotPath("m1") { path =>
+      val base = (1L to 100L).map(i => (i, i)).toDF("k", "v")
+      Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val (s0, m0) = Merge.readManifest(fs, path).get
+      assert(s0 == 0L && m0.values.map(_.rows).sum == 100L)
+      // apply touches exactly key 1's bucket: its entry changes, every
+      // other bucket keeps rows, checksum AND file list bit-for-bit
+      val touched = spark.range(1).select(
+        pmod(xxhash64(lit(1L)), lit(4L)).cast("int")).collect()(0).getInt(0)
+      Merge.applyChangesBucketed(path,
+        Seq((1L, 999L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
+      val (s1, m1) = Merge.readManifest(fs, path).get
+      assert(s1 == 1L)
+      assert(m1(touched) != m0(touched), "touched bucket's manifest entry unchanged")
+      assert((m1 - touched) == (m0 - touched), "untouched manifest entries drifted")
+      assert(m1.values.map(_.rows).sum == 100L)
+    }
   }
 
   test("readBucketedSnapshot validates against the manifest and fails closed on a torn bucket") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_m2").toString + "/snap"
-    Merge.writeBucketedSnapshot((1L to 100L).map(i => (i, i)).toDF("k", "v"),
-      path, Seq("k"), buckets = 4)
-    assert(Merge.readBucketedSnapshot(spark, path).count() == 100L)
-    // tear a bucket: remove one data file without committing a manifest —
-    // the mid-swap state a racing reader must not silently serve
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val b = Merge.readManifest(fs, path).get._2.keys.min
-    val victim = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/__bucket=$b"))
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    fs.delete(victim, false)
-    val e = intercept[IllegalStateException] {
-      Merge.readBucketedSnapshot(spark, path, maxRetries = 2, retryMs = 1)
+    withSnapshotPath("m2") { path =>
+      Merge.writeBucketedSnapshot((1L to 100L).map(i => (i, i)).toDF("k", "v"),
+        path, Seq("k"), buckets = 4)
+      assert(Merge.readBucketedSnapshot(spark, path).count() == 100L)
+      // tear a bucket: remove one data file without committing a manifest —
+      // the mid-swap state a racing reader must not silently serve
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val b = Merge.readManifest(fs, path).get._2.keys.min
+      val victim = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/__bucket=$b"))
+        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+      fs.delete(victim, false)
+      val e = intercept[IllegalStateException] {
+        Merge.readBucketedSnapshot(spark, path, maxRetries = 2, retryMs = 1)
+      }
+      assert(e.getMessage.contains("manifest"))
     }
-    assert(e.getMessage.contains("manifest"))
   }
 
   test("a missing manifest falls back to a plain read and is healed by the next apply") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_m3").toString + "/snap"
-    Merge.writeBucketedSnapshot((1L to 100L).map(i => (i, i)).toDF("k", "v"),
-      path, Seq("k"), buckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_manifest.json"), false)
-    // legacy layout: unvalidated read still works
-    assert(Merge.readBucketedSnapshot(spark, path, maxRetries = 3, retryMs = 1)
-      .count() == 100L)
-    // even an EMPTY apply re-derives the manifest from the live data
-    Merge.applyChangesBucketed(path,
-      Seq.empty[(Long, Long, String, Long)].toDF("k", "v", "op", "seq"),
-      Seq("k"), "op", "seq", 4)
-    val (seq, m) = Merge.readManifest(fs, path).get
-    assert(m.values.map(_.rows).sum == 100L, s"healed manifest wrong: $m")
+    withSnapshotPath("m3") { path =>
+      Merge.writeBucketedSnapshot((1L to 100L).map(i => (i, i)).toDF("k", "v"),
+        path, Seq("k"), buckets = 4)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      fs.delete(new org.apache.hadoop.fs.Path(path, "_manifest.json"), false)
+      // legacy layout: unvalidated read still works
+      assert(Merge.readBucketedSnapshot(spark, path, maxRetries = 3, retryMs = 1)
+        .count() == 100L)
+      // even an EMPTY apply re-derives the manifest from the live data
+      Merge.applyChangesBucketed(path,
+        Seq.empty[(Long, Long, String, Long)].toDF("k", "v", "op", "seq"),
+        Seq("k"), "op", "seq", 4)
+      val (seq, m) = Merge.readManifest(fs, path).get
+      assert(m.values.map(_.rows).sum == 100L, s"healed manifest wrong: $m")
+    }
   }
 
   test("bucketed apply supports repeated batches (stream shape)") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc_spec2").toString + "/snap"
-    val base = (1L to 100L).map(i => (i, i * 10)).toDF("k", "v")
-    Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
-    Merge.applyChangesBucketed(path,
-      Seq((1L, 111L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
-    Merge.applyChangesBucketed(path,
-      Seq((1L, 999L, "U", 2L), (2L, 0L, "D", 2L)).toDF("k", "v", "op", "seq"),
-      Seq("k"), "op", "seq", 4)
-    val got = spark.read.parquet(path).select("k", "v")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(1L) == 999L && !got.contains(2L) && got.size == 99)
+    withSnapshotPath("spec2") { path =>
+      val base = (1L to 100L).map(i => (i, i * 10)).toDF("k", "v")
+      Merge.writeBucketedSnapshot(base, path, Seq("k"), buckets = 4)
+      Merge.applyChangesBucketed(path,
+        Seq((1L, 111L, "U", 1L)).toDF("k", "v", "op", "seq"), Seq("k"), "op", "seq", 4)
+      Merge.applyChangesBucketed(path,
+        Seq((1L, 999L, "U", 2L), (2L, 0L, "D", 2L)).toDF("k", "v", "op", "seq"),
+        Seq("k"), "op", "seq", 4)
+      val got = spark.read.parquet(path).select("k", "v")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got(1L) == 999L && !got.contains(2L) && got.size == 99)
+    }
   }
 }
