@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Catalog loader for the driver-generated parquet fixtures (TESTDATA.md).
@@ -17,34 +18,47 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Footer-schema memo. `spark.read.parquet(path)` re-infers the schema
-    * on EVERY call (~86 ms measured on this host: file listing + footer
-    * read + schema conversion), and the bench times query CONSTRUCTION —
-    * a 3-table query paid ~0.25 s per build in pure re-inference. A
-    * production engine resolves table schemas from a catalog/metastore
-    * once, not per query; this memo is that catalog for the fixture
-    * tables. Keyed by full path; caches METADATA only — every query
-    * still lists and scans the parquet data itself. */
+    * on every call: it lists the path and runs a one-task Spark job that
+    * reads the footer, ~100 ms a table on 4 vCPUs, and the bench times
+    * query construction. A production engine resolves table schemas from
+    * a catalog/metastore once, not per query; this memo is that catalog
+    * for the fixture tables. Keyed by full path and the confs below;
+    * caches metadata only — every query still lists and scans the parquet
+    * data itself.
+    *
+    * The memo is filled without a job: for a single parquet file (every
+    * fixture table) the schema comes from the file's footer, read on the
+    * driver and converted as Spark's inference converts it
+    * ([[org.apache.spark.sql.graft.Shims.parquetFileSchema]]); ten tables
+    * register in ~0.1 s instead of ~1 s. A directory still goes through
+    * `spark.read.parquet(path).schema`: only Spark's inference discovers
+    * partition columns (`k=v` subdirectories) and merges part-file
+    * footers. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
+  // the session confs that change what parquet inference returns
+  // (nanosAsLong decides whether a TIMESTAMP(NANOS) column arrives as
+  // long, inferTimestampNTZ whether isAdjustedToUTC=false becomes NTZ,
+  // binaryAsString whether an unannotated BINARY column becomes a string,
+  // int96AsTimestamp whether INT96 becomes a timestamp,
+  // respectUnknownTypeAnnotation how a column with an unknown logical
+  // type converts, and caseSensitive how column names resolve) — a
+  // path-only key would let the first session's inference poison a later
+  // differently-configured session's reads
+  private[graft] val schemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive")
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    // key on the session confs that change what parquet inference RETURNS
-    // (nanosAsLong decides whether a TIMESTAMP(NANOS) column arrives as
-    // long, inferTimestampNTZ whether isAdjustedToUTC=false becomes NTZ,
-    // binaryAsString whether an unannotated BINARY column becomes a
-    // string, int96AsTimestamp whether INT96 becomes a timestamp, and
-    // caseSensitive how column names resolve) — a path-only key would let
-    // the first session's inference poison a later differently-configured
-    // session's reads
-    val key = Seq(
-      "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.parquet.inferTimestampNTZ.enabled",
-      "spark.sql.parquet.binaryAsString",
-      "spark.sql.parquet.int96AsTimestamp",
-      "spark.sql.caseSensitive").map(spark.conf.get(_)).mkString("", "|", "|" + path)
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val key = schemaConfs.map(spark.conf.get(_)).mkString("", "|", "|" + path)
+    val schema = schemaCache.computeIfAbsent(key, _ =>
+      Shims.parquetFileSchema(spark, path).getOrElse(spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

@@ -73,9 +73,12 @@ private[streaming] final class WakeableMemoryStream[T](
   // ProcessingTime(0) — functionally correct but churny; GrouperSpec's
   // close-latency bound and Bench's grouper_probe_best_of_10 trend are
   // the canaries for that regression.
-  // close() latency: query.stop() interrupts the stream thread, which
-  // unparks the wait below, so close blocks at most ~one idleParkMs per
-  // lane cycle (bounded; asserted by GrouperSpec's close-latency test).
+  // close() latency: close waits for no trigger, only for the batches in
+  // flight (its own ledger), then query.stop() interrupts the stream
+  // thread, which unparks the wait below at once; an idle 4-lane grouper
+  // closes in ~10-30 ms (GrouperSpec's close-latency test bounds it). A
+  // processAllAvailable per lane, as close once did, returned only after
+  // the lane's park expired: ~0.5 s for 4 idle lanes.
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     val first = super.latestOffset(start, limit)
     if (first != null && first != start) first
@@ -114,10 +117,12 @@ private[streaming] object WakeableMemoryStream {
   *    (`core.clj:42-44` — capacity-full pushes the accumulating batch
   *    IMMEDIATELY, in interval mode too, exactly like the reference's
   *    failed `offer` → `wakeUp`), or on close-drain (`core.clj:58-66` ≙
-  *    `processAllAvailable` + `stop`). Batch formation is owned by this
-  *    façade's buffers; the streaming lanes pick batches up event-driven
-  *    (a parked offset poll woken by addData) and simply execute
-  *    whatever batch was pushed;
+  *    a final flush, a wait on the grouper's own ledger until no live
+  *    lane holds a pending request or runs its sink, then `stop` of every
+  *    lane; like the reference, only in-flight batches are waited for).
+  *    Batch formation is owned by this façade's buffers; the streaming
+  *    lanes pick batches up event-driven (a parked offset poll woken by
+  *    addData) and simply execute whatever batch was pushed;
   *  - FIFO within a batch (`core.clj:129-130`): requests carry a sequence
   *    id and each batch is processed in id order;
   *  - positional result alignment with null padding (`core.clj:72-76`):
@@ -199,39 +204,45 @@ final class Grouper[A, B] private (
   private implicit val reqEnc: Encoder[(Long, A)] =
     Encoders.tuple(Encoders.scalaLong, encA)
 
+  // the lanes inside their sink's addBatch: set on entry, cleared under
+  // lock on exit, so close() can wait out callbacks still running
+  private val inBatch = new java.util.concurrent.atomic.AtomicIntegerArray(parallelism)
+
   // MicroBatchExecution calls a v1 sink's addBatch with the micro-batch's
   // planned execution, so the lane reads the rows from it and hands them
   // to the batch function; nothing plans or runs the batch Dataset, so a
   // micro-batch launches no Spark job. Rows are sorted by id on the driver
-  private def laneSink(source: WakeableMemoryStream[(Long, A)]): Sink = new Sink {
+  private def laneSink(lane: Int, source: WakeableMemoryStream[(Long, A)]): Sink = new Sink {
     override def addBatch(batchId: Long, data: DataFrame): Unit = {
-      val rows = source.rowsOf(data).sortBy(_._1)
-      val ids = rows.map(_._1)
-      if (ids.nonEmpty) {
-        try {
-          // LocalRelation dataset: procs that just collect/map run with
-          // no cluster jobs; procs that do real Spark work still can
-          val payloads = spark.createDataset(rows.map(_._2))(encA)
-          runBatch(payloads) match {
-            case Left(scalar) =>
-              ids.foreach(complete(_, scalar))
-            case Right(results) =>
-              // positional zip; pad missing tail with null (core.clj:74-76)
-              ids.zipWithIndex.foreach { case (id, i) =>
-                complete(id, if (i < results.length) results(i) else null.asInstanceOf[B])
-              }
+      inBatch.set(lane, 1)
+      try {
+        val rows = source.rowsOf(data).sortBy(_._1)
+        val ids = rows.map(_._1)
+        if (ids.nonEmpty) {
+          try {
+            // LocalRelation dataset: procs that just collect/map run with
+            // no cluster jobs; procs that do real Spark work still can
+            val payloads = spark.createDataset(rows.map(_._2))(encA)
+            runBatch(payloads) match {
+              case Left(scalar) =>
+                ids.foreach(complete(_, scalar))
+              case Right(results) =>
+                // positional zip; pad missing tail with null (core.clj:74-76)
+                ids.zipWithIndex.foreach { case (id, i) =>
+                  complete(id, if (i < results.length) results(i) else null.asInstanceOf[B])
+                }
+            }
+          } catch {
+            case e: Throwable => ids.foreach(fail(_, e))
           }
-        } catch {
-          case e: Throwable => ids.foreach(fail(_, e))
         }
-        lock.synchronized(lock.notifyAll())
-      }
+      } finally lock.synchronized { inBatch.set(lane, 0); lock.notifyAll() }
     }
     override def toString: String = "GrouperLaneSink"
   }
 
   private val lanes: Array[(WakeableMemoryStream[(Long, A)], StreamingQuery)] =
-    LocalCheckpointFileManager.scoped(spark)(Array.fill(parallelism) {
+    LocalCheckpointFileManager.scoped(spark)(Array.tabulate(parallelism) { lane =>
       val source = new WakeableMemoryStream[(Long, A)](spark, 100L)(reqEnc)
       // interval 0, NOT the user interval: batch boundaries are decided
       // by this façade's flushes and PACING lives in the wakeable
@@ -241,7 +252,7 @@ final class Grouper[A, B] private (
       // driver wakeups/s instead of the old 5 ms tick's 200 (interval
       // 0 also skips ProcessingTimeExecutor's falling-behind warning,
       // which a parked poll would otherwise trip every idle cycle)
-      (source, Shims.startQuery(source.toDS(), laneSink(source), Trigger.ProcessingTime(0L)))
+      (source, Shims.startQuery(source.toDS(), laneSink(lane, source), Trigger.ProcessingTime(0L)))
     })
 
   // the reference's dispatcher thread (`core.clj:124-135`): in interval
@@ -351,30 +362,44 @@ final class Grouper[A, B] private (
     * the interval tick, capacity or close. */
   def flushNow(): Unit = lock.synchronized(flushBuffers())
 
+  // called under lock: whether a live lane still holds a pending request
+  // or is inside its sink. `pending` is read first: `complete` removes a
+  // request before its callback runs, but the lane's `inBatch` flag was
+  // set before that and is cleared only under lock, so a callback still
+  // running shows in one of the two
+  private def draining(): Boolean = {
+    val live = lanes.map(_._2.isActive)
+    pending.keySet.asScala.exists(id => live((id % parallelism).toInt)) ||
+      lanes.indices.exists(l => live(l) && inBatch.get(l) == 1)
+  }
+
   /** Graceful drain (`core.clj:58-66` / `shutdown!`): every accepted
-    * request is processed before this returns. A lane whose query has
+    * request, its callback or errback, and its future finish before this
+    * returns. Like the reference, close waits only for the batches still
+    * in flight, on the grouper's own ledger: after the final flush it
+    * waits until no live lane holds a pending request or runs its sink,
+    * then stops every lane (an idle lane's parked poll wakes at once), so
+    * closing an idle grouper takes milliseconds. A lane whose query has
     * died or was stopped cannot process its requests: close still stops
     * and awaits every lane, then fails each request left pending, with
     * the lane's death as the exception's cause, and returns normally. */
   def close(): Unit = {
     if (running.compareAndSet(true, false)) {
       dispatcher.foreach(_.shutdownNow())
-      lock.synchronized(flushBuffers())
-      // a dead lane's processAllAvailable throws its death cause, and a
-      // stopped lane's returns at once; neither may keep the other lanes
-      // from draining and stopping
-      val causes = lanes.map { case (_, q) =>
-        try { q.processAllAvailable(); None }
-        catch { case e: Throwable => Some(e) }
+      lock.synchronized {
+        flushBuffers()
+        // bounded: a lane that dies mid-batch wakes no one, and the
+        // re-check sees it is no longer live
+        while (draining()) lock.wait(50)
       }
       lanes.foreach { case (_, q) =>
         try { q.stop(); q.awaitTermination() }
-        catch { case _: Throwable => () } // the death cause was kept above
+        catch { case _: Throwable => () } // q.exception keeps the death cause
       }
       pending.keySet.asScala.toList.foreach { id =>
         val lane = (id % parallelism).toInt
         fail(id, new IllegalStateException(
-          s"Grouper lane $lane stopped before processing request $id", causes(lane).orNull))
+          s"Grouper lane $lane stopped before processing request $id", lanes(lane)._2.exception.orNull))
       }
     }
   }

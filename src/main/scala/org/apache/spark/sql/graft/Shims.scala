@@ -80,6 +80,37 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog.getTempViewNames()
 
+  /** The schema `spark.read.parquet(path)` infers for a single parquet
+    * file, read from its footer on the driver; `None` when `path` is not a
+    * file. Spark's inference reads the same footer inside a one-task job
+    * (`ParquetFileFormat.mergeSchemasInParallel`); this builds its schema
+    * converter from the same session confs and, as a file source does,
+    * makes every field nullable (`sessionState` and `asNullable` are
+    * package-private). */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val hadoopConf = state.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = try Some(p.getFileSystem(hadoopConf).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    st.filter(_.isFile).map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hadoopConf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val conf = state.conf
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(st.getPath, footer), converter).asNullable
+    }
+  }
+
   /** Starts `df` as a streaming query into a v1 `sink`
     * (`StreamingQueryManager.startQuery` is `private[sql]`), with the
     * arguments `DataStreamWriter` passes for `foreachBatch`: no name, a

@@ -255,26 +255,69 @@ class GrouperSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("close() of an idle grouper stays latency-bounded despite parked lanes") {
-    // the wakeable source parks its idle offset poll up to 100 ms per
-    // cycle; query.stop()'s interrupt must unpark it, so close() of a
-    // fully idle multi-lane grouper is bounded by ~one park per lane
-    // cycle — NOT by wait-out-the-park times lanes. A regression in
-    // which Spark drives an overload the park doesn't serve (or stop()
-    // stops interrupting the stream thread) shows up here as a stall.
+    // the wakeable source parks an idle lane's offset poll up to 100 ms;
+    // close waits only for the batches in flight and stop() interrupts the
+    // park, so closing 4 idle lanes takes milliseconds. A close that waits
+    // for each lane's next trigger (processAllAvailable per lane) reads
+    // ~0.5 s here; a stall of Spark's stop shows up the same way
     implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    def idleCloseMs(): Double = {
+      val g = Grouper.start[Int, Int](spark,
+        ds => ds.collect().toSeq.map(_ + 1),
+        capacity = 100, intervalMs = Some(10L), parallelism = 4)
+      val fs = (1 to 8).map(g.submit(_))
+      fs.foreach(await(_))
+      Thread.sleep(250) // let every lane go idle and park
+      val t0 = System.nanoTime()
+      g.close()
+      val ms = (System.nanoTime() - t0) / 1e6
+      assert(!g.isRunning)
+      ms
+    }
+    val closes = Seq.fill(3)(idleCloseMs())
+    assert(closes.min < 200.0, closes.map(ms => f"$ms%.0f").mkString(
+      "idle 4-lane close() took ", ", ", " ms — waiting on parked lanes?"))
+  }
+
+  test("close() returns after a running callback returns, without interrupting it") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    val entered = new CountDownLatch(1)
+    val returned = new AtomicBoolean(false)
+    val interrupted = new AtomicBoolean(false)
     val g = Grouper.start[Int, Int](spark,
-      ds => ds.collect().toSeq.map(_ + 1),
-      capacity = 100, intervalMs = Some(10L), parallelism = 4)
-    val fs = (1 to 8).map(g.submit(_))
-    fs.foreach(await(_))
-    Thread.sleep(250) // let every lane go idle and park
-    val t0 = System.nanoTime()
+      ds => ds.collect().toSeq.map(_ + 1), capacity = 100, intervalMs = None, parallelism = 4)
+    // the callback runs after `complete` has taken its request out of the
+    // pending set: close must still wait for it, and must not stop its lane
+    val f = g.submit(1, callback = _ => {
+      entered.countDown()
+      try Thread.sleep(300)
+      catch { case _: InterruptedException => interrupted.set(true) }
+      if (Thread.currentThread().isInterrupted) interrupted.set(true)
+      returned.set(true)
+    })
+    g.flushNow()
+    assert(entered.await(60, TimeUnit.SECONDS))
     g.close()
-    val closeSec = (System.nanoTime() - t0) / 1e9
-    // generous CI bound: typical is <1 s; a park-stall regression across
-    // 4 lanes with processAllAvailable retries lands well above this
-    assert(closeSec < 15.0, f"close() took $closeSec%.1f s — parked-lane stall")
-    assert(!g.isRunning)
+    assert(returned.get(), "close() returned while the last batch's callback was running")
+    assert(!interrupted.get(), "the callback's thread was interrupted")
+    assert(await(f) == 2)
+  }
+
+  test("close() of a healthy grouper leaves every lane query without an exception") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaInt
+    // close stops each lane as soon as its last batch leaves the sink, so
+    // the stop can land while the lane writes the batch's commit log: that
+    // must read as a stop, not as the query's failure
+    (1 to 5).foreach { round =>
+      val (g, queries) = lanesOf(Grouper.start[Int, Int](spark,
+        ds => ds.collect().toSeq.map(_ + 1), capacity = 100, intervalMs = None, parallelism = 4))
+      assert(queries.size == 4)
+      val fs = (1 to 20).map(g.submit(_))
+      g.close()
+      assert(fs.map(await(_)) == (2 to 21))
+      queries.foreach(q => assert(q.exception.isEmpty, s"round $round: lane ${q.id} failed: ${q.exception}"))
+      assert(!queries.exists(_.isActive))
+    }
   }
 
   // Catalyst rule runs of `flushRun(20)` on a warm session: the count is
